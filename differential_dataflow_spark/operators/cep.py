@@ -39,6 +39,8 @@ from collections.abc import Sequence
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from differential_dataflow_spark.session import Scratch
+
 
 def _strictly_after(key: Sequence[str]):
     """RANGE frame covering rows whose (long) order value is >= current + 1
@@ -179,13 +181,6 @@ class FunnelMaintainer:
         steps: Sequence[Column],
         within_sec: int | float,
     ):
-        from differential_dataflow_spark.session import (
-            release_checkpoint,
-            tracked_local_checkpoint,
-        )
-
-        self._ckpt = tracked_local_checkpoint
-        self._release = release_checkpoint
         if len(steps) < 2:
             raise ValueError("funnel needs at least 2 steps")
         self.spark = spark
@@ -199,8 +194,9 @@ class FunnelMaintainer:
         self._tcols = [f"t{i}" for i in range(1, len(steps) + 1)]
         self.pending: DataFrame | None = None
         self._max_seen: int | None = None
-        self._spent: list = []  # released at the NEXT batch: the returned
-        # update stream is a view over this batch's checkpoints
+        # The returned matches are a view over this batch's checkpoints;
+        # everything but the live pending set is released at the NEXT batch.
+        self._scratch = Scratch()
 
     def _events(self, batch: DataFrame) -> DataFrame:
         ts_us = F.unix_micros(F.col(self.ts).cast("timestamp"))
@@ -217,17 +213,15 @@ class FunnelMaintainer:
         """Ingest one strictly-later micro-batch; returns its newly
         completed matches ``(*key, t1..tn)``. Raises if the batch violates
         the watermark order (an event at or before the last seen ts)."""
-        for df in self._spent:
-            self._release(df)
-        self._spent = []
-        ev = self._ckpt(self._events(batch))
+        self._scratch.reap(keep=(self.pending,))
+        ev = self._scratch.ck(self._events(batch))
         row = ev.agg(
             F.min("__ts").alias("lo"), F.max("__ts").alias("hi")
         ).collect()[0]
         lo, hi = row["lo"], row["hi"]
         null_t = [F.lit(None).cast("long").alias(c) for c in self._tcols[1:]]
         if self.pending is None:
-            self.pending = self._ckpt(
+            self.pending = self._scratch.ck(
                 ev.filter(F.lit(False)).select(
                     *self.key,
                     F.lit(1).alias("stage"),
@@ -236,7 +230,6 @@ class FunnelMaintainer:
                 )
             )
         if lo is None:
-            self._release(ev)
             return self.pending.filter(F.lit(False)).select(
                 *self.key, *self._tcols
             )
@@ -298,7 +291,7 @@ class FunnelMaintainer:
             )
             chains = rest.unionByName(advanced).unionByName(unbound)
 
-        chains = self._ckpt(chains)
+        chains = self._scratch.ck(chains)
         done = chains.filter(F.col("stage") == n).select(
             *self.key, *self._tcols
         )
@@ -310,15 +303,12 @@ class FunnelMaintainer:
         keep = chains.filter(F.col("stage") < n).filter(
             F.lit(hi) < last_bound + F.lit(self.gap)
         )
-        self._spent += [self.pending, ev, chains]
-        self.pending = self._ckpt(keep)
+        self.pending = self._scratch.ck(keep)
         self._max_seen = hi
         return done
 
     def release(self) -> None:
-        for df in self._spent + ([self.pending] if self.pending is not None else []):
-            self._release(df)
-        self._spent = []
+        self._scratch.reap()
 
 
 def absence(
@@ -381,13 +371,6 @@ class AbsenceMaintainer:
         expected: Column,
         within_sec: int | float,
     ):
-        from differential_dataflow_spark.session import (
-            release_checkpoint,
-            tracked_local_checkpoint,
-        )
-
-        self._ckpt = tracked_local_checkpoint
-        self._release = release_checkpoint
         self.spark = spark
         self.key = list(key)
         self.ts = ts
@@ -396,14 +379,12 @@ class AbsenceMaintainer:
         self.gap = int(within_sec * 1_000_000)
         self.pending: DataFrame | None = None  # open anchors (*key, t1)
         self._max_seen: int | None = None
-        self._spent: list = []
+        self._scratch = Scratch()
 
     def process_batch(self, batch: DataFrame) -> DataFrame:
-        for df in self._spent:
-            self._release(df)
-        self._spent = []
+        self._scratch.reap(keep=(self.pending,))
         ts_us = F.unix_micros(F.col(self.ts).cast("timestamp"))
-        ev = self._ckpt(
+        ev = self._scratch.ck(
             batch.select(
                 *self.key,
                 ts_us.alias("__ts"),
@@ -412,7 +393,7 @@ class AbsenceMaintainer:
             )
         )
         if self.pending is None:
-            self.pending = self._ckpt(
+            self.pending = self._scratch.ck(
                 ev.filter(F.lit(False)).select(
                     *self.key, F.col("__ts").alias("t1")
                 )
@@ -422,7 +403,6 @@ class AbsenceMaintainer:
         ).collect()[0]
         lo, hi = row["lo"], row["hi"]
         if lo is None:
-            self._release(ev)
             return self.pending.filter(F.lit(False))
         if self._max_seen is not None and lo <= self._max_seen:
             raise ValueError(
@@ -466,15 +446,13 @@ class AbsenceMaintainer:
             F.col("__nxt").isNull() | (F.col("__nxt") > F.col("t1") + F.lit(self.gap))
         ).select(*self.key, "t1")
         # Deadline passed -> ALERT; else stay pending.
-        alerts = self._ckpt(
+        alerts = self._scratch.ck(
             survives.filter(F.lit(hi) > F.col("t1") + F.lit(self.gap))
         )
         still_open = survives.filter(
             F.lit(hi) <= F.col("t1") + F.lit(self.gap)
         )
-        self._spent += [self.pending, ev]
-        self.pending = self._ckpt(still_open)
-        self._spent.append(alerts)
+        self.pending = self._scratch.ck(still_open)
         self._max_seen = hi
         return alerts
 
@@ -485,8 +463,4 @@ class AbsenceMaintainer:
         return self.pending
 
     def release(self) -> None:
-        for df in self._spent + (
-            [self.pending] if self.pending is not None else []
-        ):
-            self._release(df)
-        self._spent = []
+        self._scratch.reap()

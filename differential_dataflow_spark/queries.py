@@ -200,9 +200,11 @@ def dd_reachability_maintained(spark, sf_dir):
     arbitrary updates): the edge set arrives in three batches — batch 1
     prematurely carries a slice that batch 2 RETRACTS (delete-and-rederive
     repairs only the affected region) and batch 3 restores, so the final
-    edge set equals the oracle's. Monotone batches take the fast path
-    (streaming/maintain.py::IncrementalReachability.add_edges); the deletion
-    batch goes through process_batch. Final reached set must equal the
+    edge set equals the oracle's. ``IncrementalReachability``
+    (streaming/maintain.py) is the reachability program run on the generic
+    ``MaintainedFixpoint`` (streaming/fixpoint.py): insertion batches run
+    its semi-naive expansion, the deletion batch its delete-and-rederive
+    with a dst-keyed rederive boundary. Final reached set must equal the
     recursive-CTE oracle over ALL edges — and per-batch update-stream
     exactness under mixed deletions is pinned by pytest
     (tests/test_maintain.py)."""

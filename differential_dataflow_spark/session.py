@@ -165,19 +165,17 @@ def _persistent_entries(spark: SparkSession) -> list[tuple[int, object]]:
     return out
 
 
-def tracked_local_checkpoint(df, eager: bool = True):
-    """``localCheckpoint`` that records the newly-persisted RDD(s) on the
-    returned DataFrame so :func:`release_checkpoint` can actually free them.
+def _local_checkpoint(df, eager: bool, count: bool):
+    """Shared body of the tracked checkpoints: ``localCheckpoint`` whose
+    backing RDD handle is recorded on the result as ``_ckpt_rdds``; with
+    ``count``, the checkpoint is lazy and a ``count()`` materializes it.
+    Returns ``(checkpointed_df, row_count or None)``.
 
-    ``DataFrame.unpersist()`` is a no-op for localCheckpoint blocks — they are
-    RDD-level persists outside the cache manager — so fixpoint loops that
-    relied on it leaked one checkpoint RDD per round. The handle is resolved
-    from the returned DataFrame's OWN plan (its LogicalRDD's backing RDD) —
-    never from a global persistent-RDD-map diff, which under any concurrent
-    persisting job could capture that job's RDD and later unpersist a live
-    lineage-truncated RDD. A (locked) map diff remains only as a fallback for
-    plan shapes without a direct handle.
-    """
+    The handle is resolved from the returned DataFrame's OWN plan (its
+    LogicalRDD's backing RDD) — never from a global persistent-RDD-map diff,
+    which under any concurrent persisting job could capture that job's RDD
+    and later unpersist a live lineage-truncated RDD. A map diff remains
+    only as a fallback for plan shapes without a direct handle."""
     spark = df.sparkSession
     # The lock wraps the ONE localCheckpoint call plus the map snapshots
     # around it, so even when the plan-handle resolution fails the fallback
@@ -187,17 +185,35 @@ def tracked_local_checkpoint(df, eager: bool = True):
     # captured. The lock is driver-side and cheap next to the checkpoint job.
     with _ckpt_lock:
         before = {rid for rid, _ in _persistent_entries(spark)}
-        out = df.localCheckpoint(eager=eager)
+        out = df.localCheckpoint(eager=eager and not count)
         try:
-            analyzed = out._jdf.queryExecution().analyzed()
-            out._ckpt_rdds = [analyzed.rdd()]
+            out._ckpt_rdds = [out._jdf.queryExecution().analyzed().rdd()]
         except Exception:
+            # Fallback: the map diff must bracket the materialization too
+            # (the RDD is registered at persist time, but keep the window
+            # lock-covered so no concurrent checkpoint is captured).
+            n = out.count() if count else None
             out._ckpt_rdds = [
                 jrdd
                 for rid, jrdd in _persistent_entries(spark)
                 if rid not in before
             ]
-    return out
+            return out, n
+    # Handle already resolved from the plan: run the materializing count (a
+    # full Spark job) OUTSIDE the lock so concurrent maintenance loops only
+    # serialize on the cheap handle-resolution window, not on each other's
+    # jobs.
+    return out, (out.count() if count else None)
+
+
+def tracked_local_checkpoint(df, eager: bool = True):
+    """``localCheckpoint`` that records the newly-persisted RDD(s) on the
+    returned DataFrame so :func:`release_checkpoint` can actually free them.
+
+    ``DataFrame.unpersist()`` is a no-op for localCheckpoint blocks — they are
+    RDD-level persists outside the cache manager — so fixpoint loops that
+    relied on it leaked one checkpoint RDD per round."""
+    return _local_checkpoint(df, eager, count=False)[0]
 
 
 def counted_local_checkpoint(df) -> tuple:
@@ -209,33 +225,51 @@ def counted_local_checkpoint(df) -> tuple:
     checkpoint LAZY and driving materialization with ``count()`` persists
     the blocks and answers the emptiness probe in the same job, halving the
     per-round driver floor. Returns ``(checkpointed_df, row_count)``."""
-    spark = df.sparkSession
-    with _ckpt_lock:
-        before = {rid for rid, _ in _persistent_entries(spark)}
-        out = df.localCheckpoint(eager=False)
-        try:
-            analyzed = out._jdf.queryExecution().analyzed()
-            out._ckpt_rdds = [analyzed.rdd()]
-            resolved = True
-        except Exception:
-            resolved = False
-        if not resolved:
-            # Fallback map-diff must bracket the materialization (the RDD is
-            # registered at persist time, but keep the window lock-covered so
-            # no concurrent checkpoint is captured).
-            n = out.count()
-            out._ckpt_rdds = [
-                jrdd
-                for rid, jrdd in _persistent_entries(spark)
-                if rid not in before
-            ]
-            return out, n
-    # Handle already resolved from the plan: run the materializing count (a
-    # full Spark job) OUTSIDE the lock so concurrent maintenance loops only
-    # serialize on the cheap handle-resolution window, not on each other's
-    # jobs.
-    n = out.count()  # materializes AND persists the checkpoint blocks
-    return out, n
+    return _local_checkpoint(df, eager=False, count=True)
+
+
+class Scratch:
+    """Per-batch checkpoint scratch of one maintainer.
+
+    Checkpoints taken through :meth:`ck` / :meth:`ckn` are released together
+    at the start of the NEXT batch (:meth:`reap`): the update stream a batch
+    returns is a lazy view over them, valid until the next call, and
+    releasing them then keeps a long stream from leaking one checkpoint per
+    loop round. State that outlives the batch leaves the scratch either by
+    :meth:`reap`'s ``keep`` (the maintainer's current state frame) or by
+    :meth:`hand_off` to a trace part (the trace's compaction frees it)."""
+
+    def __init__(self):
+        self._held: list = []
+
+    def ck(self, df):
+        out = tracked_local_checkpoint(df)
+        self._held.append(out)
+        return out
+
+    def ckn(self, df) -> tuple:
+        """:meth:`ck` fused with the convergence probe (one job)."""
+        out, n = counted_local_checkpoint(df)
+        self._held.append(out)
+        return out, n
+
+    def hand_off(self, ck, part):
+        """Give ``part`` (a trace part viewed over checkpoint ``ck``) the
+        release handle of ``ck``'s blocks and stop holding ``ck``: the part
+        is long-lived trace state, and reaping the blocks with the batch
+        scratch would tear them out from under later batches."""
+        part._ckpt_rdds = list(getattr(ck, "_ckpt_rdds", ()))
+        self._held = [df for df in self._held if df is not ck]
+        return part
+
+    def reap(self, keep=()) -> None:
+        """Release every held checkpoint except those in ``keep``, which
+        stay held (and are released by a later reap once superseded)."""
+        kept = [df for df in self._held if any(df is k for k in keep)]
+        for df in self._held:
+            if not any(df is k for k in keep):
+                release_checkpoint(df)
+        self._held = kept
 
 
 def release_checkpoint(df, blocking: bool = False) -> None:

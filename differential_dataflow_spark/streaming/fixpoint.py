@@ -5,14 +5,14 @@ The reference gets this for free from its architecture: ``iterate`` runs the
 loop body "infinitely often" under timestamps with an iteration coordinate,
 so ANY program written against collections is incrementally maintained when
 its inputs change (src/operators/iterate.rs:49-127; examples/bfs.rs
-demonstrates maintenance under arbitrary edge updates). Our earlier
-maintainers (IncrementalReachability, IncrementalBFS, KCoreMaintainer in
-streaming/maintain.py) each hand-derive the affected-region repair for one
-algorithm. This module provides the *general* engine for the monotone,
-distinct-valued class via **delete-and-rederive** (DRed — Gupta, Mumick &
-Subrahmanian, "Maintaining Views Incrementally", SIGMOD 1993 — the classic
-public-literature counterpart of the reference's second-order
-differentials):
+demonstrates maintenance under arbitrary edge updates). This module is
+the *general* engine for the monotone, distinct-valued class via
+**delete-and-rederive** (DRed — Gupta, Mumick & Subrahmanian, "Maintaining
+Views Incrementally", SIGMOD 1993 — the classic public-literature
+counterpart of the reference's second-order differentials).
+``IncrementalReachability`` (streaming/maintain.py) is one program run on
+it; ``IncrementalBFS`` (min-valued facts) and ``KCoreMaintainer`` (a
+threshold, not monotone) still hand-derive their affected-region repair.
 
 The user supplies a Datalog-shaped program:
 
@@ -28,7 +28,9 @@ The user supplies a Datalog-shaped program:
   standard semi-naive requirement — exactly the class the reference's
   ``iterate`` + ``distinct`` idiom covers.
 
-Maintenance per batch of input updates ``(payload..., diff in {+1,-1})``:
+Inputs are multisets: a row's multiplicity is the sum of its diffs, and a
+row is present while that sum is positive. Maintenance per batch of input
+updates ``(payload..., diff)``:
 
 1. OVERDELETE — the suspect region D: facts whose derivation may rest on a
    deleted input row. Seeds are the retracted axioms (``axioms(old) \\
@@ -36,11 +38,13 @@ Maintenance per batch of input updates ``(payload..., diff in {+1,-1})``:
    with that relation restricted to its deleted rows)`` — any derivation
    with a deleted premise is caught through whichever relation the premise
    came from. D closes under ``step(D, old_inputs)`` intersected with the
-   derived set, so work is O(|affected region|), not O(|derived|).
-2. REDERIVE — within D, from the untouched boundary: ``axioms(new) ∩ D``
-   union ``step(derived \\ D, new_inputs) ∩ D``, closed under ``step(R,
-   new_inputs) ∩ D``. Facts with a surviving alternative derivation come
-   back; ``removed = D \\ R`` is emitted with diff −1.
+   derived set, so work is O(|affected region|), not O(|derived|). Facts
+   in ``axioms(new)`` survive the batch, so D never enters or passes
+   through them (a reachability root is never suspect).
+2. REDERIVE — within D, from the untouched boundary: ``step(derived \\ D,
+   new_inputs) ∩ D``, closed under ``step(R, new_inputs) ∩ D``. Facts with
+   a surviving alternative derivation come back; ``removed = D \\ R`` is
+   emitted with diff −1.
 3. INSERT — seeds are the new axioms plus, per input carrying insertions,
    ``step(derived, inputs with that relation restricted to its inserted
    rows)``, minus already-derived; then the ordinary semi-naive expansion
@@ -53,8 +57,8 @@ every loop round is ONE counted-checkpoint job (materialization fused with
 the convergence probe). The one inherently program-shaped cost is the
 rederive boundary seed (``step`` over the kept region): the default scans
 it once per deletion batch; programs with a cheaper reverse-key form (like
-IncrementalReachability's dst-keyed boundary) can pass ``rederive_seeds``
-to override it.
+IncrementalReachability's dst-keyed boundary: only edges INTO the suspect
+set) pass ``rederive_seeds`` to override it.
 """
 
 from __future__ import annotations
@@ -66,9 +70,8 @@ from pyspark.sql import functions as F
 
 from differential_dataflow_spark.collection import DIFF
 from differential_dataflow_spark.session import (
-    counted_local_checkpoint,
+    Scratch,
     micro_batch_scope,
-    release_checkpoint,
     tracked_local_checkpoint,
 )
 from differential_dataflow_spark.streaming.maintain import TraceView
@@ -76,6 +79,36 @@ from differential_dataflow_spark.streaming.maintain import TraceView
 Inputs = Mapping[str, DataFrame]
 Step = Callable[[DataFrame, Inputs], DataFrame]
 Axioms = Callable[[Inputs], DataFrame]
+
+
+# Row gate for broadcasting a loop frontier into the step's joins (the
+# same gate as ``semi_naive``'s default): under it the input relations
+# stream map-side instead of being broadcast or exchanged every round.
+BROADCAST_FRONTIER_ROWS = 200_000
+
+
+def _small(frontier: DataFrame, n_rows: int) -> DataFrame:
+    if n_rows <= BROADCAST_FRONTIER_ROWS:
+        return F.broadcast(frontier)
+    return frontier
+
+
+class _Reads(Mapping):
+    """Input mapping that records which relations a rule reads."""
+
+    def __init__(self, inputs: Inputs):
+        self._inputs = inputs
+        self.read: set[str] = set()
+
+    def __getitem__(self, name: str) -> DataFrame:
+        self.read.add(name)
+        return self._inputs[name]
+
+    def __iter__(self):
+        return iter(self._inputs)
+
+    def __len__(self) -> int:
+        return len(self._inputs)
 
 
 class MaintainedFixpoint:
@@ -97,11 +130,12 @@ class MaintainedFixpoint:
         n_buckets: int = 64,
         max_iters: int = 10_000,
     ):
-        """``inputs``: initial relations (payload columns, no diff).
-        ``input_keys``: per-input key columns (joins co-locate on them; the
-        input's declared key when bucketed). ``rederive_seeds(suspect, kept,
-        new_inputs)``: optional program-specific boundary (defaults to
-        ``step(kept, new_inputs)``).
+        """``inputs``: initial relations (payload columns, no diff; a row
+        present twice has multiplicity 2). ``input_keys``: per-input key
+        columns (joins co-locate on them; the input's declared key when
+        bucketed). ``rederive_seeds(kept, suspect, new_inputs)``: optional
+        program-specific boundary — facts of ``suspect`` derivable in one
+        step from ``kept`` (defaults to ``step(kept, new_inputs)``).
 
         ``uses_derived=True`` lifts the LINEAR restriction: the step may
         reference the derived relation itself through the reserved input
@@ -120,7 +154,7 @@ class MaintainedFixpoint:
         self.rederive_seeds = rederive_seeds
         self.uses_derived = uses_derived
         self.max_iters = max_iters
-        self._spent: list[DataFrame] = []
+        self._scratch = Scratch()
 
         self.inputs: dict[str, TraceView] = {}
         self._input_neg: dict[str, bool] = {}
@@ -133,9 +167,8 @@ class MaintainedFixpoint:
                 bucket_path=(f"{state_dir}/{name}" if state_dir else None),
                 n_buckets=n_buckets,
             )
-            tv.seed(
-                df.distinct().withColumn(DIFF, F.lit(1).cast("long")), key=key
-            )
+            # One row per copy: a row present twice has multiplicity 2.
+            tv.seed(df.withColumn(DIFF, F.lit(1).cast("long")), key=key)
             self.inputs[name] = tv
             self._input_neg[name] = False
 
@@ -144,53 +177,39 @@ class MaintainedFixpoint:
         self._derived_neg = False
 
         supports = self._supports()
+        # Which inputs the axioms read: a batch that changes none of them
+        # leaves the axioms as they were, and skips the axiom diffs.
+        reads = _Reads(supports)
+        base_axioms = axioms(reads).select(*self.fact_cols).distinct()
+        self._axiom_inputs = reads.read
         n_state = max(
             (tv.base_rows or 0 for tv in self.inputs.values()), default=None
         )
         with micro_batch_scope(spark, n_state):
-            base, n = counted_local_checkpoint(
-                axioms(supports).select(*self.fact_cols).distinct()
-            )
-            self._spent.append(base)  # init scratch; reaped at the first batch
             self.derived.seed(
-                base.select(*self.fact_cols, F.lit(1).cast("long").alias(DIFF)),
+                base_axioms.withColumn(DIFF, F.lit(1).cast("long")),
                 key=self.fact_cols,
             )
-            self._expand(base, n, supports)
+            # The seeded base is the first frontier: no second copy of it.
+            self._expand(
+                self.derived.base.select(*self.fact_cols),
+                self.derived.base_rows,
+                supports,
+            )
             self.derived.compact()  # fold the initial rounds into one base
 
     # -- bookkeeping ---------------------------------------------------- #
 
-    def _ck(self, df: DataFrame) -> DataFrame:
-        out = tracked_local_checkpoint(df)
-        self._spent.append(out)
-        return out
-
-    def _ckn(self, df: DataFrame) -> tuple[DataFrame, int]:
-        out, n = counted_local_checkpoint(df)
-        self._spent.append(out)
-        return out, n
-
-    def _reap(self) -> None:
-        for df in self._spent:
-            release_checkpoint(df)
-        self._spent = []
-
     def _append_derived(self, ck: DataFrame, diff: int) -> None:
-        """Seal a checkpointed fact set as a derived-trace part. The part
-        takes OWNERSHIP of the checkpoint blocks (released by the trace's own
-        compaction) — reaping them with the per-batch scratch would tear the
-        trace's blocks out from under later batches."""
+        """Seal a checkpointed fact set as a derived-trace part; the part
+        takes ownership of the checkpoint blocks."""
         part = ck.select(
             *self.fact_cols, F.lit(diff).cast("long").alias(DIFF)
         )
-        part._ckpt_rdds = list(getattr(ck, "_ckpt_rdds", ()))
-        if ck in self._spent:
-            self._spent.remove(ck)
-        self.derived.append(part)
+        self.derived.append(self._scratch.hand_off(ck, part))
 
     def release(self) -> None:
-        self._reap()
+        self._scratch.reap()
         self.derived.release()
         for tv in self.inputs.values():
             tv.release()
@@ -244,8 +263,8 @@ class MaintainedFixpoint:
             # Non-linear steps see ALL facts so far (semi-naive "full"
             # relation) — rebound every round as parts accumulate.
             sup = self._bind(supports, self._derived_support())
-            new, n_frontier = self._ckn(
-                self.step(frontier, sup)
+            new, n_frontier = self._scratch.ckn(
+                self.step(_small(frontier, n_frontier), sup)
                 .select(*self.fact_cols)
                 .distinct()
                 .join(self._derived_support(), self.fact_cols, "left_anti")
@@ -263,9 +282,12 @@ class MaintainedFixpoint:
         bound: DataFrame,
         broadcast_bound: bool = False,
         dyn_derived: DataFrame | None = None,
-    ) -> tuple[DataFrame, int]:
-        """Close ``seeds`` under ``step`` restricted to ``bound``; returns the
-        checkpointed closure and its row count. ``broadcast_bound`` only when
+        exclude: DataFrame | None = None,
+    ) -> DataFrame:
+        """Close ``seeds`` under ``step`` restricted to ``bound`` minus
+        ``exclude`` (facts the closure neither enters nor passes through);
+        returns the closure as the union of its checkpointed rounds.
+        ``broadcast_bound`` only when
         the bound is known small (the suspect set) — the overdelete closure's
         bound is the WHOLE derived set and must stream, not broadcast.
         ``dyn_derived`` (non-linear rederivation only): bind ``$derived`` to
@@ -273,34 +295,25 @@ class MaintainedFixpoint:
         through a still-suspect fact would keep facts alive via dead
         derivations, so only kept-plus-already-rederived facts qualify."""
         bnd = F.broadcast(bound) if broadcast_bound else bound
-        parts = [seeds]
-        frontier, n_front = seeds, n_seeds
+        acc, frontier, n_front = seeds, seeds, n_seeds
         for _ in range(self.max_iters):
             if n_front == 0:
-                break
-            acc = parts[0]
-            for p in parts[1:]:
-                acc = acc.unionByName(p)
+                return acc
+            seen = acc if exclude is None else acc.unionByName(exclude)
             sup = (
                 self._bind(supports, dyn_derived.unionByName(acc))
                 if dyn_derived is not None
                 else supports
             )
-            nxt, n_front = self._ckn(
-                self.step(frontier, sup)
+            frontier, n_front = self._scratch.ckn(
+                self.step(_small(frontier, n_front), sup)
                 .select(*self.fact_cols)
                 .distinct()
                 .join(bnd, self.fact_cols, "left_semi")
-                .join(acc, self.fact_cols, "left_anti")
+                .join(seen, self.fact_cols, "left_anti")
             )
-            parts.append(nxt)
-            frontier = nxt
-        else:
-            raise RuntimeError("closure did not converge")
-        acc = parts[0]
-        for p in parts[1:]:
-            acc = acc.unionByName(p)
-        return self._ckn(acc)
+            acc = acc.unionByName(frontier)
+        raise RuntimeError("closure did not converge")
 
     # -- maintenance -------------------------------------------------------- #
 
@@ -308,13 +321,13 @@ class MaintainedFixpoint:
         self, updates: Mapping[str, DataFrame]
     ) -> DataFrame:
         """Apply one batch of input updates (per input: payload columns +
-        ``diff`` in {+1, −1}) and return the derived-fact update stream
-        ``(fact_cols..., diff)``. Valid until the next call."""
+        ``diff``, summed per payload row) and return the derived-fact update
+        stream ``(fact_cols..., diff)``. Valid until the next call."""
         with micro_batch_scope(self.spark):
             return self._process_batch(updates)
 
     def _process_batch(self, updates: Mapping[str, DataFrame]) -> DataFrame:
-        self._reap()
+        self._scratch.reap()
         # Compact BEFORE capturing support views: TraceView views are valid
         # only until the next append/compact, and the old-support snapshots
         # below must survive the whole batch. A compaction folds the ±1
@@ -333,17 +346,21 @@ class MaintainedFixpoint:
 
         dels: dict[str, DataFrame] = {}
         inss: dict[str, DataFrame] = {}
-        any_del = any_ins = False
         for name, upd in updates.items():
             tv = self.inputs[name]
             payload = [c for c in upd.columns if c != DIFF]
-            # LAZY checkpoint + the phase-deciding aggregate as its
-            # materializer: one Spark job per input delta instead of two
-            # (eager checkpoint, then a separate aggregate job).
+            # Consolidated per payload row (multiset inputs: an edge
+            # inserted twice needs two retractions). LAZY checkpoint + the
+            # phase-deciding aggregate as its materializer: one Spark job per
+            # input delta instead of two (eager checkpoint, then a separate
+            # aggregate job). The checkpoint is the sealed trace part, so the
+            # trace's compaction releases it.
             d = tracked_local_checkpoint(
-                upd.select(*payload, DIFF).distinct(), eager=False
+                upd.groupBy(*payload)
+                .agg(F.sum(DIFF).cast("long").alias(DIFF))
+                .filter(F.col(DIFF) != 0),
+                eager=False,
             )
-            self._spent.append(d)
             # One cheap aggregate over the cached delta decides which phases
             # this batch pays for (insert-only batches skip DRed entirely).
             row = d.agg(
@@ -351,35 +368,33 @@ class MaintainedFixpoint:
                 F.sum((F.col(DIFF) > 0).cast("long")).alias("ni"),
             ).collect()[0]
             n_del, n_ins_rows = int(row["nd"] or 0), int(row["ni"] or 0)
-            # The delta checkpoint doubles as the sealed trace part; hand its
-            # release handle to the trace so compaction can free the blocks.
-            part = d.select(*payload, F.col(DIFF))
-            part._ckpt_rdds = list(getattr(d, "_ckpt_rdds", ()))
-            self._spent.remove(d)
-            tv.append(part)
+            tv.append(d)
             if n_del:
                 dels[name] = d.filter(F.col(DIFF) < 0).select(*payload)
                 self._input_neg[name] = True
-                any_del = True
             if n_ins_rows:
                 inss[name] = d.filter(F.col(DIFF) > 0).select(*payload)
-                any_ins = True
 
         new_supports = self._supports()
-        ax_new = self._ck(
-            self.axioms(new_supports).select(*self.fact_cols).distinct()
-        )
+        ax_del = any(name in dels for name in self._axiom_inputs)
+        ax_ins = any(name in inss for name in self._axiom_inputs)
+        ax_new = ax_old
+        if ax_del or ax_ins:
+            ax_new = self._scratch.ck(
+                self.axioms(new_supports).select(*self.fact_cols).distinct()
+            )
 
         # Phase 1: OVERDELETE — suspect seeds from retracted axioms and from
         # derivations through each input's deleted rows. Skipped outright on
         # insert-only batches (axioms are monotone in the inputs, so none
         # can retract without a deletion).
-        n_seeds = 0
-        seeds: DataFrame | None = None
-        if any_del:
-            seed_parts = [
-                ax_old.join(ax_new, self.fact_cols, "left_anti")
-            ]
+        removed, n_removed = self.derived.view().limit(0), 0
+        if dels:
+            seed_parts = (
+                [ax_old.join(ax_new, self.fact_cols, "left_anti")]
+                if ax_del
+                else []
+            )
             for name, del_df in dels.items():
                 restricted = dict(self._bind(old_supports, derived_old))
                 restricted[name] = F.broadcast(del_df)
@@ -389,61 +404,59 @@ class MaintainedFixpoint:
             seeds = seed_parts[0]
             for p in seed_parts[1:]:
                 seeds = seeds.unionByName(p)
-            seeds, n_seeds = self._ckn(
-                seeds.distinct().join(
-                    derived_old, self.fact_cols, "left_semi"
+            seeds, n_seeds = self._scratch.ckn(
+                seeds.distinct()
+                .join(derived_old, self.fact_cols, "left_semi")
+                .join(ax_new, self.fact_cols, "left_anti")
+            )
+            if n_seeds:
+                suspect = self._closure_within(
+                    seeds,
+                    n_seeds,
+                    self._bind(old_supports, derived_old),
+                    bound=derived_old,
+                    exclude=ax_new,
                 )
-            )
-
-        removed, n_removed = seeds, 0
-        if n_seeds:
-            suspect, n_suspect = self._closure_within(
-                seeds,
-                n_seeds,
-                self._bind(old_supports, derived_old),
-                bound=derived_old,
-            )
-            # Phase 2: REDERIVE within the suspect region from the kept
-            # boundary over the POST-batch inputs.
-            kept = derived_old.join(
-                F.broadcast(suspect), self.fact_cols, "left_anti"
-            )
-            boundary_fn = self.rederive_seeds or (
-                lambda kept, sus, sup: self.step(kept, sup)
-            )
-            r0, n_r0 = self._ckn(
-                ax_new.join(F.broadcast(suspect), self.fact_cols, "left_semi")
-                .unionByName(
+                # Phase 2: REDERIVE within the suspect region from the kept
+                # boundary over the POST-batch inputs.
+                kept = derived_old.join(
+                    F.broadcast(suspect), self.fact_cols, "left_anti"
+                )
+                boundary_fn = self.rederive_seeds or (
+                    lambda kept, sus, sup: self.step(kept, sup)
+                )
+                r0, n_r0 = self._scratch.ckn(
                     boundary_fn(kept, suspect, self._bind(new_supports, kept))
                     .select(*self.fact_cols)
-                    .join(
-                        F.broadcast(suspect), self.fact_cols, "left_semi"
-                    )
+                    .join(F.broadcast(suspect), self.fact_cols, "left_semi")
+                    .distinct()
                 )
-                .distinct()
-            )
-            rederived, _ = self._closure_within(
-                r0,
-                n_r0,
-                new_supports,
-                bound=suspect,
-                broadcast_bound=True,
-                dyn_derived=kept if self.uses_derived else None,
-            )
-            removed, n_removed = self._ckn(
-                suspect.join(rederived, self.fact_cols, "left_anti")
-            )
-            if n_removed:
-                self._append_derived(removed, -1)
-                self._derived_neg = True
+                rederived = self._closure_within(
+                    r0,
+                    n_r0,
+                    new_supports,
+                    bound=suspect,
+                    broadcast_bound=True,
+                    dyn_derived=kept if self.uses_derived else None,
+                )
+                removed, n_removed = self._scratch.ckn(
+                    suspect.join(rederived, self.fact_cols, "left_anti")
+                )
+                if n_removed:
+                    self._append_derived(removed, -1)
+                    self._derived_neg = True
 
         # Phase 3: INSERT — new axioms plus derivations through each input's
         # inserted rows, then the ordinary semi-naive expansion. Skipped on
         # delete-only batches.
         added_parts: list[DataFrame] = []
-        if any_ins:
+        if inss:
             derived_now = self._derived_support()
-            ins_parts = [ax_new.join(ax_old, self.fact_cols, "left_anti")]
+            ins_parts = (
+                [ax_new.join(ax_old, self.fact_cols, "left_anti")]
+                if ax_ins
+                else []
+            )
             for name, ins_df in inss.items():
                 restricted = dict(self._bind(new_supports, derived_now))
                 restricted[name] = F.broadcast(ins_df)
@@ -453,7 +466,7 @@ class MaintainedFixpoint:
             ins_seeds = ins_parts[0]
             for p in ins_parts[1:]:
                 ins_seeds = ins_seeds.unionByName(p)
-            ins_seeds, n_ins = self._ckn(
+            ins_seeds, n_ins = self._scratch.ckn(
                 ins_seeds.distinct().join(
                     derived_now, self.fact_cols, "left_anti"
                 )
@@ -464,15 +477,7 @@ class MaintainedFixpoint:
                     ins_seeds, n_ins, new_supports
                 )
 
-        if n_removed:
-            out = removed.select(
-                *self.fact_cols, F.lit(-1).cast("long").alias(DIFF)
-            )
-        else:
-            empty = self.derived.view().limit(0)
-            out = empty.select(
-                *self.fact_cols, F.lit(-1).cast("long").alias(DIFF)
-            )
+        out = removed.select(*self.fact_cols, F.lit(-1).cast("long").alias(DIFF))
         for p in added_parts:
             out = out.unionByName(
                 p.select(*self.fact_cols, F.lit(1).cast("long").alias(DIFF))

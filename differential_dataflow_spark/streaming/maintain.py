@@ -35,6 +35,7 @@ from pyspark.sql import functions as F
 
 from differential_dataflow_spark.collection import DIFF
 from differential_dataflow_spark.session import (
+    Scratch,
     counted_local_checkpoint,
     micro_batch_scope,
     release_checkpoint,
@@ -239,35 +240,49 @@ class TraceView:
         self.parts = []
 
 
+def _reach_step(frontier: DataFrame, inp) -> DataFrame:
+    """``reach(y) :- reach(x), edge(x, y)`` applied to frontier facts. A
+    semi-join, so the planner sizes the result by the edge relation, not by
+    a join product: the derived trace stays small enough in its estimates
+    for the anti-join against it to be planned as a broadcast."""
+    return (
+        inp["edge"]
+        .join(frontier.select(F.col("node").alias("src")), ["src"], "left_semi")
+        .select(F.col("dst").alias("node"))
+    )
+
+
+def _reach_boundary(kept: DataFrame, suspect: DataFrame, inp) -> DataFrame:
+    """Rederive seeds keyed by dst: only edges INTO the suspect set whose
+    tail is kept can rederive a suspect node, so the kept region is probed
+    by the (small) tail set instead of being joined whole — the reference's
+    arrange-by-reverse-key. Every join streams the big side map-side
+    against a broadcast set bounded by the suspect region."""
+    into = inp["edge"].join(
+        F.broadcast(suspect.select(F.col("node").alias("dst"))),
+        ["dst"],
+        "left_semi",
+    )
+    tails = kept.select(F.col("node").alias("src")).join(
+        F.broadcast(into.select("src").distinct()), ["src"], "left_semi"
+    )
+    return into.join(F.broadcast(tails), ["src"], "left_semi").select(
+        F.col("dst").alias("node")
+    )
+
+
 class IncrementalReachability:
     """Incremental ITERATE: maintain ``reach(roots)`` under edge updates.
 
-    Two tiers, matching the reference's incremental iteration
-    (src/operators/iterate.rs:49-127; examples/bfs.rs maintains arbitrary
-    changes via second-order differentials):
-
-    - ``add_edges`` — the monotone fast path: per insertion batch, seed the
-      frontier with delta edges whose src is reached and dst is not, then
-      run the semi-naive loop over the combined edge trace; total per-batch
-      work is O(newly attached region).
-    - ``process_batch`` — MIXED insertions and deletions via
-      delete-and-rederive (the classic DRed decomposition of Datalog view
-      maintenance — public-literature counterpart of the reference's
-      second-order differentials), both phases frontier-bounded:
-      OVERDELETE the suspect region (closure from the deleted edges' reached
-      heads through the still-reached graph, roots excluded), REDERIVE
-      within it from the untouched boundary over the post-batch edges, emit
-      ``-1`` for the nodes that did not survive, then run the monotone
-      expansion for the insertion side. Per-batch work is O(affected
-      region), not O(graph).
-
-    State: two TraceViews — the edge trace (key ``src``; bucketed parquet
-    optional, so frontier expansion reads only touched src-buckets at
-    state-bigger-than-memory scale) and the reached set. Once retractions
-    enter a trace, reads consolidate to POSITIVE SUPPORT (sum(diff) > 0);
-    the monotone path skips that aggregate entirely (``_edges_neg`` /
-    ``_reached_neg`` flags), so insertion-only streams pay nothing for the
-    generality.
+    The program ``reach(x) :- root(x); reach(y) :- reach(x), edge(x, y)``
+    run on :class:`~differential_dataflow_spark.streaming.fixpoint.
+    MaintainedFixpoint` (reference src/operators/iterate.rs:49-127;
+    examples/bfs.rs maintains arbitrary changes): insertions extend the
+    reached set by semi-naive expansion from the newly attached region, and
+    deletions go through delete-and-rederive, so per-batch work is
+    O(affected region), not O(graph). Edges are a multiset: an edge
+    inserted twice needs two retractions. ``state_dir`` stores the edge
+    trace as bucketed parquet (key ``src``).
     """
 
     def __init__(
@@ -282,351 +297,53 @@ class IncrementalReachability:
     ):
         """``edges``: (src, dst); ``roots``: (node). Runs the initial
         fixpoint (one-time O(graph) cost, like any bulk load)."""
-        self.spark = spark
-        self.max_iters = max_iters
-        self.edges = TraceView(
+        # Deferred: fixpoint.py builds on this module's TraceView.
+        from differential_dataflow_spark.streaming.fixpoint import (
+            MaintainedFixpoint,
+        )
+
+        self._fx = MaintainedFixpoint(
             spark,
+            fact_cols=["node"],
+            axioms=lambda inp: inp["root"],
+            step=_reach_step,
+            inputs={
+                "edge": edges.select("src", "dst"),
+                "root": roots.select("node"),
+            },
+            input_keys={"edge": ["src"], "root": ["node"]},
+            rederive_seeds=_reach_boundary,
             compact_every=compact_every,
-            bucket_path=(state_dir + "/edges") if state_dir else None,
+            state_dir=state_dir,
             n_buckets=n_buckets,
+            max_iters=max_iters,
         )
-        self.edges.seed(
-            edges.select("src", "dst", F.lit(1).cast("long").alias(DIFF)),
-            key=["src"],
-        )
-        self.reached = TraceView(spark, compact_every=compact_every)
-        self._edges_neg = False
-        self._reached_neg = False
-        base = tracked_local_checkpoint(
-            roots.select(F.col("node")).distinct()
-        )
-        self.roots = base
-        self.reached.seed(
-            base.select("node", F.lit(1).cast("long").alias(DIFF)), key=["node"]
-        )
-        # Micro-round scope for the driver-floor-bound semi-naive loop:
-        # shuffle sizing derived from the edge-state row count (see
-        # session.micro_batch_scope — AQE's per-stage re-planning is pure
-        # latency on these delta-bounded rounds).
-        with micro_batch_scope(spark, self.edges.base_rows):
-            self._expand(base)
-            self.reached.compact()  # fold the initial rounds into one base
-
-    def _reached_support(self) -> DataFrame:
-        """Current reached node set. Monotone histories read the raw union;
-        once retraction parts exist, consolidate to positive support."""
-        v = self.reached.view()
-        if not self._reached_neg:
-            return v.select("node")
-        return (
-            v.groupBy("node")
-            .agg(F.sum(DIFF).alias("__s"))
-            .filter(F.col("__s") > 0)
-            .select("node")
-        )
-
-    def _edge_support(self, keys: DataFrame | None = None) -> DataFrame:
-        """Positive-support edge set ``(src, dst)``, bucket-pruned to the
-        given src ``keys`` when the trace is bucketed."""
-        ev = self.edges.view() if keys is None else self.edges.lookup_view(keys)
-        if keys is not None:
-            ev = ev.join(F.broadcast(keys), ["src"], "left_semi")
-        if not self._edges_neg:
-            return ev.select("src", "dst")
-        return (
-            ev.groupBy("src", "dst")
-            .agg(F.sum(DIFF).alias("__s"))
-            .filter(F.col("__s") > 0)
-            .select("src", "dst")
-        )
-
-    def _expand(
-        self, frontier: DataFrame, n_frontier: int | None = None
-    ) -> list[DataFrame]:
-        """Semi-naive loop from ``frontier`` (a checkpointed (node) set whose
-        rows are already in ``reached``); appends each round's new nodes to
-        the reached trace and returns the new parts. One counted-checkpoint
-        job per round (materialization + convergence probe fused); pass the
-        frontier's known row count to skip the initial probe."""
-        new_parts: list[DataFrame] = []
-        for _ in range(self.max_iters):
-            if n_frontier is None:
-                n_frontier = 0 if frontier.limit(1).isEmpty() else 1
-            if n_frontier == 0:
-                break
-            keys = frontier.select(F.col("node").alias("src"))
-            cand = (
-                self._edge_support(keys)
-                .select(F.col("dst").alias("node"))
-                .distinct()
-            )
-            seen = self._reached_support()
-            new, n_frontier = counted_local_checkpoint(
-                cand.join(seen, ["node"], "left_anti")
-            )
-            part = new.select("node", F.lit(1).cast("long").alias(DIFF))
-            self.reached.append(part)
-            new_parts.append(part)
-            frontier = new
-        else:
-            raise RuntimeError("reachability did not close within max_iters")
-        return new_parts
 
     def add_edges(self, delta: DataFrame) -> DataFrame:
         """Apply one batch of edge ADDITIONS (src, dst[, diff>0]); returns
         the newly reachable nodes as ``(node, diff=+1)`` update rows."""
-        with micro_batch_scope(self.spark):
-            return self._add_edges(delta)
-
-    def _add_edges(self, delta: DataFrame) -> DataFrame:
-        if DIFF in delta.columns:
-            if not delta.filter(F.col(DIFF) <= 0).isEmpty():
-                raise ValueError(
-                    "add_edges is the monotone fast path; use process_batch "
-                    "for mixed insertions/deletions (delete-and-rederive)"
-                )
-            delta = delta.drop(DIFF)
-        # Compact BEFORE computing this batch (the previous batch's returned
-        # frame is out of its validity window by now — the TraceView cursor
-        # contract). Compaction folds retractions away, so the negative-
-        # support flags reset with it.
-        if self.reached.maybe_compact():
-            self._reached_neg = False
-        d = tracked_local_checkpoint(delta.select("src", "dst").distinct())
-        reached_nodes = self._reached_support()
-        seed, n_seed = counted_local_checkpoint(
-            d.join(
-                reached_nodes.withColumnRenamed("node", "src"), ["src"], "left_semi"
+        if DIFF in delta.columns and not delta.filter(F.col(DIFF) <= 0).isEmpty():
+            raise ValueError(
+                "add_edges takes insertions only; use process_batch for "
+                "mixed insertions/deletions (delete-and-rederive)"
             )
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(reached_nodes, ["node"], "left_anti")
-        )
-        # Seal the new edges FIRST: later rounds must traverse them.
-        if self.edges.maybe_compact():
-            self._edges_neg = False
-        self.edges.append(d.select("src", "dst", F.lit(1).cast("long").alias(DIFF)))
-        seed_part = seed.select("node", F.lit(1).cast("long").alias(DIFF))
-        self.reached.append(seed_part)
-        parts = [seed_part] + self._expand(seed, n_seed)
-        out = parts[0]
-        for p in parts[1:]:
-            out = out.unionByName(p)
-        return out
+        return self.process_batch(delta)
 
     def process_batch(self, delta: DataFrame) -> DataFrame:
-        """Apply one MIXED batch of edge updates ``(src, dst, diff)`` —
-        insertions and deletions — via delete-and-rederive; returns the
+        """Apply one batch of edge updates ``(src, dst[, diff])`` —
+        insertions and deletions, diff defaulting to +1; returns the
         reached-set update stream ``(node, diff)``. Valid until the next
-        call.
-
-        Phases (each frontier-bounded, so per-batch work is O(affected)):
-
-        1. OVERDELETE — suspect set D: closure from the deleted edges'
-           reached heads through the (post-batch) reached graph, roots
-           excluded. Any old derivation through a deleted edge (x, y) is
-           covered by seeding y directly, so the closure over surviving
-           edges is exact.
-        2. REDERIVE — within D, expand from the boundary (nodes of D with a
-           surviving in-edge from the kept region) over the post-batch
-           edges; survivors keep their derivation, the rest emit ``-1``.
-        3. INSERT — the monotone expansion for the insertion side.
-        """
-        with micro_batch_scope(self.spark):
-            return self._process_batch(delta)
-
-    def _process_batch(self, delta: DataFrame) -> DataFrame:
+        call."""
         if DIFF not in delta.columns:
             delta = delta.withColumn(DIFF, F.lit(1).cast("long"))
-        d = tracked_local_checkpoint(
-            delta.groupBy("src", "dst")
-            .agg(F.sum(DIFF).cast("long").alias(DIFF))
-            .filter(F.col(DIFF) != 0)
-        )
-        dele = d.filter(F.col(DIFF) < 0)
-        if dele.isEmpty():
-            out = self.add_edges(d.filter(F.col(DIFF) > 0).drop(DIFF))
-            release_checkpoint(d)
-            return out
-
-        if self.reached.maybe_compact():
-            self._reached_neg = False
-        if self.edges.maybe_compact():
-            self._edges_neg = False
-        old_reached = tracked_local_checkpoint(self._reached_support())
-        spent: list[DataFrame] = [old_reached]
-
-        # Seal the delta, then find SUPPORT-DELETED edges: touched edges of
-        # the deletion side whose post-batch multiplicity dropped to <= 0
-        # (a retraction against remaining multiplicity deletes nothing).
-        self.edges.append(d)
-        self._edges_neg = True
-        touched = dele.select("src", "dst")
-        tv = self.edges.lookup_view(touched.select("src"))
-        post = (
-            tv.join(F.broadcast(touched), ["src", "dst"], "left_semi")
-            .groupBy("src", "dst")
-            .agg(F.sum(DIFF).alias("__s"))
-        )
-        support_deleted = touched.join(
-            post.filter(F.col("__s") > 0), ["src", "dst"], "left_anti"
-        )
-
-        # Phase 1: overdelete closure (suspect region D). One counted-
-        # checkpoint job per round (materialization + convergence fused).
-        rsrc = old_reached.select(F.col("node").alias("src"))
-        seeds, n_front = counted_local_checkpoint(
-            support_deleted.join(rsrc, ["src"], "left_semi")
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(old_reached, ["node"], "left_semi")
-            .join(self.roots, ["node"], "left_anti")
-        )
-        spent.append(seeds)
-        d_parts = [seeds]
-        frontier = seeds
-        for _ in range(self.max_iters):
-            if n_front == 0:
-                break
-            sus = d_parts[0]
-            for p in d_parts[1:]:
-                sus = sus.unionByName(p)
-            nxt, n_front = counted_local_checkpoint(
-                self._edge_support(frontier.select(F.col("node").alias("src")))
-                .select(F.col("dst").alias("node"))
-                .distinct()
-                .join(old_reached, ["node"], "left_semi")
-                .join(self.roots, ["node"], "left_anti")
-                .join(sus, ["node"], "left_anti")
-            )
-            spent.append(nxt)
-            d_parts.append(nxt)
-            frontier = nxt
-        else:
-            raise RuntimeError("overdelete closure did not converge")
-        suspect = d_parts[0]
-        for p in d_parts[1:]:
-            suspect = suspect.unionByName(p)
-        suspect, n_suspect = counted_local_checkpoint(suspect)
-        spent.append(suspect)
-
-        # Phase 2: rederive within D from the kept boundary. Every join here
-        # streams the BIG side map-side against a broadcast small set (the
-        # suspect region / candidate tails) — the kept region is never
-        # shuffled or broadcast (a dst-keyed secondary edge trace would
-        # prune the into-suspect scan further, mirroring the reference's
-        # arrange-by-reverse-key). Skipped outright when the deletions
-        # touched no reached derivation (n_suspect == 0).
-        removed, n_removed = suspect, 0
-        if n_suspect:
-            into_suspect = tracked_local_checkpoint(
-                self._edge_support()
-                .join(
-                    F.broadcast(suspect.withColumnRenamed("node", "dst")),
-                    ["dst"],
-                    "left_semi",
-                )
-            )
-            spent.append(into_suspect)
-            cand_tails = into_suspect.select(F.col("src").alias("node")).distinct()
-            kept_tails = (
-                old_reached.join(F.broadcast(cand_tails), ["node"], "left_semi")
-                .join(F.broadcast(suspect), ["node"], "left_anti")
-            )
-            boundary_seeds, n_front = counted_local_checkpoint(
-                into_suspect.join(
-                    F.broadcast(kept_tails.withColumnRenamed("node", "src")),
-                    ["src"],
-                    "left_semi",
-                )
-                .select(F.col("dst").alias("node"))
-                .distinct()
-            )
-            spent.append(boundary_seeds)
-            r_parts = [boundary_seeds]
-            frontier = boundary_seeds
-            for _ in range(self.max_iters):
-                if n_front == 0:
-                    break
-                red = r_parts[0]
-                for p in r_parts[1:]:
-                    red = red.unionByName(p)
-                nxt, n_front = counted_local_checkpoint(
-                    self._edge_support(frontier.select(F.col("node").alias("src")))
-                    .select(F.col("dst").alias("node"))
-                    .distinct()
-                    .join(F.broadcast(suspect), ["node"], "left_semi")
-                    .join(red, ["node"], "left_anti")
-                )
-                spent.append(nxt)
-                r_parts.append(nxt)
-                frontier = nxt
-            else:
-                raise RuntimeError("rederive closure did not converge")
-            rederived = r_parts[0]
-            for p in r_parts[1:]:
-                rederived = rederived.unionByName(p)
-            removed, n_removed = counted_local_checkpoint(
-                suspect.join(rederived, ["node"], "left_anti")
-            )
-            if n_removed:
-                self.reached.append(
-                    removed.select("node", F.lit(-1).cast("long").alias(DIFF))
-                )
-                self._reached_neg = True
-            else:
-                # Everything rederived — drop the empty checkpoint now (the
-                # compact branch below won't run to release it) and keep an
-                # EMPTY placeholder (suspect itself is non-empty here).
-                release_checkpoint(removed)
-                removed = suspect.limit(0)
-
-        # Phase 3: the insertion side (seeds = inserted heads now reachable).
-        ins = d.filter(F.col(DIFF) > 0).select("src", "dst")
-        now_reached = self._reached_support()
-        ins_seeds, n_ins = counted_local_checkpoint(
-            ins.join(
-                now_reached.withColumnRenamed("node", "src"), ["src"], "left_semi"
-            )
-            .select(F.col("dst").alias("node"))
-            .distinct()
-            .join(now_reached, ["node"], "left_anti")
-        )
-        added_parts: list[DataFrame] = []
-        if n_ins:
-            seed_part = ins_seeds.select(
-                "node", F.lit(1).cast("long").alias(DIFF)
-            )
-            self.reached.append(seed_part)
-            added_parts = [seed_part] + self._expand(ins_seeds, n_ins)
-
-        out = removed.select("node", F.lit(-1).cast("long").alias(DIFF))
-        for p in added_parts:
-            out = out.unionByName(p)
-        out = tracked_local_checkpoint(out)
-        for df in spent:
-            release_checkpoint(df)
-        # Fold the ±1 pairs out of the reached trace now (one O(reached)
-        # hash aggregate per batch WITH ACTUAL REMOVALS — the DRed trade;
-        # counting-based rederivation would avoid it): afterwards every
-        # surviving row is a bare +1 again, so subsequent monotone batches
-        # and reads skip the positive-support aggregate.
-        if self._reached_neg:
-            self.reached.compact()
-            self._reached_neg = False
-            # The compacted base no longer references this batch's backings.
-            release_checkpoint(removed)
-            release_checkpoint(ins_seeds)
-        return out
+        return self._fx.process_batch({"edge": delta.select("src", "dst", DIFF)})
 
     def reached_nodes(self) -> DataFrame:
         """Current reachable set (node rows)."""
-        return self._reached_support()
+        return self._fx.facts()
 
     def release(self) -> None:
-        self.edges.release()
-        self.reached.release()
-        release_checkpoint(self.roots)
+        self._fx.release()
 
 
 class IncrementalBFS:
@@ -673,7 +390,10 @@ class IncrementalBFS:
         self.spark = spark
         self.root = root
         self.max_iters = max_iters
-        self._spent: list = []
+        # Every intermediate (closure parts, per-round relaxation maps, the
+        # previous distance map) is scratch: without the per-batch release
+        # the min-merge rounds leak one O(V) checkpoint per round.
+        self._scratch = Scratch()
         self.edges = TraceView(
             spark,
             compact_every=compact_every,
@@ -687,40 +407,15 @@ class IncrementalBFS:
         # dist state: a checkpointed (node, dist) map, rewritten only in the
         # affected region per batch (the rewrite unions untouched rows by
         # reference, so the per-batch write is O(changed)).
-        start = self._ck(
+        start = self._scratch.ck(
             spark.createDataFrame([(root, 0)], "node long, dist long")
         )
         with micro_batch_scope(spark, self.edges.base_rows):
             self.dist = self._relax_down(
-                start, 1, None, self._ck(self._edges_pos())
+                start, 1, None, self._scratch.ck(self._edges_pos())
             )
 
     # -- helpers ------------------------------------------------------- #
-
-    def _ck(self, df: DataFrame) -> DataFrame:
-        """Checkpoint + register for release at the NEXT batch: every
-        intermediate (closure parts, per-round relaxation maps, the previous
-        distance map) stays valid through the returned update stream's
-        validity window, then its blocks are freed — without this the
-        min-merge rounds leak one O(V) checkpoint per round."""
-        out = tracked_local_checkpoint(df)
-        self._spent.append(out)
-        return out
-
-    def _ckn(self, df: DataFrame) -> tuple[DataFrame, int]:
-        """_ck fused with the convergence probe: checkpoint + row count in
-        ONE job (counted_local_checkpoint) — every loop here is driver-floor
-        bound, so the separate limit(1).isEmpty() job per round was ~half
-        the per-round cost."""
-        out, n = counted_local_checkpoint(df)
-        self._spent.append(out)
-        return out, n
-
-    def _reap(self) -> None:
-        for df in self._spent:
-            if df is not self.dist:
-                release_checkpoint(df)
-        self._spent = [df for df in self._spent if df is self.dist]
 
     def _edges_pos(self) -> DataFrame:
         """Current edge multiset's positive support (src, dst)."""
@@ -752,7 +447,7 @@ class IncrementalBFS:
         rounds = 0
         for _ in range(self.max_iters):
             if n_improved == 0:
-                return self._ck(dist) if rounds else dist
+                return self._scratch.ck(dist) if rounds else dist
             cand = (
                 live.join(
                     F.broadcast(improved.withColumnRenamed("node", "src")),
@@ -763,7 +458,7 @@ class IncrementalBFS:
                 .agg(F.min("__nd").alias("__nd"))
             )
             merged = cand.join(dist, ["node"], "left")
-            better, n_improved = self._ckn(
+            better, n_improved = self._scratch.ckn(
                 merged.filter(
                     F.col("dist").isNull() | (F.col("__nd") < F.col("dist"))
                 ).select("node", F.col("__nd").alias("dist"))
@@ -789,16 +484,16 @@ class IncrementalBFS:
     def _process_batch(
         self, insert: DataFrame | None, delete: DataFrame | None
     ) -> DataFrame:
-        self._reap()
+        self._scratch.reap(keep=(self.dist,))
         old_dist = self.dist
         # The pre-batch edge support is only consulted by the deletion
         # phase's SP-DAG closure — skip its consolidation job entirely on
         # insert-only batches.
         edges_old = (
-            self._ck(self._edges_pos()) if delete is not None else None
+            self._scratch.ck(self._edges_pos()) if delete is not None else None
         )
         # One TAGGED delta checkpoint covers both sides (one job instead of
-        # two) and doubles as the trace part — a plain checkpoint, NOT _ck:
+        # two) and doubles as the trace part — a plain checkpoint, NOT scratch:
         # it is long-lived edge state, released by the TraceView's own
         # compaction, and reaping it at the next batch would tear the edge
         # trace's blocks out from under later rounds. ins/dele are lazy
@@ -839,7 +534,7 @@ class IncrementalBFS:
         # relaxation round this batch (at warehouse scale this fold is
         # partition-wise and pruned; per-round re-consolidation was the
         # dominant shuffle cost).
-        edges_new = self._ck(self._edges_pos())
+        edges_new = self._scratch.ck(self._edges_pos())
 
         dist = old_dist
         n_affected = 0
@@ -852,7 +547,7 @@ class IncrementalBFS:
             )
             # Seeds: heads of deleted SP-DAG edges (dele is small — two
             # broadcast probes into the old distance map, no shuffle of it).
-            seeds, n_front = self._ckn(
+            seeds, n_front = self._scratch.ckn(
                 du.join(F.broadcast(dele), ["src"])
                 .join(dv, ["dst"])
                 .filter(F.col("__dv") == F.col("__du") + 1)
@@ -872,7 +567,7 @@ class IncrementalBFS:
                 aff = parts[0]
                 for p in parts[1:]:
                     aff = aff.unionByName(p)
-                nxt, n_front = self._ckn(
+                nxt, n_front = self._scratch.ckn(
                     edges_old.join(
                         F.broadcast(frontier.withColumnRenamed("node", "src")),
                         ["src"],
@@ -892,7 +587,7 @@ class IncrementalBFS:
             affected = parts[0].select("node")
             for p in parts[1:]:
                 affected = affected.unionByName(p.select("node"))
-            affected, n_affected = self._ckn(
+            affected, n_affected = self._scratch.ckn(
                 affected.filter(F.col("node") != self.root)
             )
             # Keep non-affected distances; re-derive the affected region by
@@ -903,7 +598,7 @@ class IncrementalBFS:
             # reference's arrange-by-reverse-key). Skipped outright when the
             # deleted edges touched no shortest path (n_affected == 0).
             if n_affected:
-                kept = self._ck(
+                kept = self._scratch.ck(
                     old_dist.join(affected, ["node"], "left_anti")
                 )
                 dist = kept
@@ -917,7 +612,7 @@ class IncrementalBFS:
                     .select(F.col("src").alias("node"))
                     .distinct()
                 )
-                boundary, n_front = self._ckn(
+                boundary, n_front = self._scratch.ckn(
                     kept.join(into_affected, ["node"], "left_semi")
                 )
                 for _ in range(self.max_iters):
@@ -939,7 +634,7 @@ class IncrementalBFS:
                         .agg(F.min("__nd").alias("__nd"))
                     )
                     merged = cand.join(dist, ["node"], "left")
-                    better, n_front = self._ckn(
+                    better, n_front = self._scratch.ckn(
                         merged.filter(
                             F.col("dist").isNull()
                             | (F.col("__nd") < F.col("dist"))
@@ -950,14 +645,14 @@ class IncrementalBFS:
                         .unionByName(better)
                     )
                     boundary = better
-                dist = self._ck(dist)
+                dist = self._scratch.ck(dist)
 
         if ins is not None:
             # Decrease-only relaxation seeded by improving inserted edges.
             du = dist.withColumnRenamed("node", "src").withColumnRenamed(
                 "dist", "__du"
             )
-            seeds, n_seeds = self._ckn(
+            seeds, n_seeds = self._scratch.ckn(
                 ins.join(du, ["src"])
                 .select(
                     F.col("dst").alias("node"), (F.col("__du") + 1).alias("__nd")
@@ -1011,7 +706,7 @@ class IncrementalBFS:
 
     def release(self) -> None:
         self.edges.release()
-        release_checkpoint(self.dist)
+        self._scratch.reap()  # the distance map is scratch-held too
 
 
 class CountMaintainer:
@@ -1175,7 +870,7 @@ class KCoreMaintainer:
         self.spark = spark
         self.k = k
         self.max_iters = max_iters
-        self._spent: list[DataFrame] = []
+        self._scratch = Scratch()
         self.edges = TraceView(
             spark,
             compact_every=compact_every,
@@ -1194,28 +889,11 @@ class KCoreMaintainer:
             key=["src"],
         )
         # Initial fixpoint: full peel from all nodes.
-        all_nodes = self._ck(sym.select(F.col("src").alias("node")).distinct())
+        all_nodes = self._scratch.ck(sym.select(F.col("src").alias("node")).distinct())
         with micro_batch_scope(spark, self.edges.base_rows):
             self.core = self._peel(all_nodes, fixed=None, bulk_first=True)
 
     # -- helpers ------------------------------------------------------- #
-
-    def _ck(self, df: DataFrame) -> DataFrame:
-        out = tracked_local_checkpoint(df)
-        self._spent.append(out)
-        return out
-
-    def _ckn(self, df: DataFrame) -> tuple[DataFrame, int]:
-        """_ck fused with the convergence probe (one job per peel round)."""
-        out, n = counted_local_checkpoint(df)
-        self._spent.append(out)
-        return out, n
-
-    def _reap(self) -> None:
-        for df in self._spent:
-            if df is not self.core:
-                release_checkpoint(df)
-        self._spent = [df for df in self._spent if df is self.core]
 
     def _support_from(self, srcs: DataFrame | None) -> DataFrame:
         """Live (src, dst) support edges out of the given ``(src)`` key set
@@ -1309,11 +987,11 @@ class KCoreMaintainer:
                     )
                 )
             first = False
-            drop, n_drop = self._ckn(
+            drop, n_drop = self._scratch.ckn(
                 frontier.join(keep, ["node"], "left_anti")
             )
             if n_drop == 0:
-                return self._ck(cur) if rounds else candidates
+                return self._scratch.ck(cur) if rounds else candidates
             rounds += 1
             cur = cur.join(drop, ["node"], "left_anti")
             # next frontier: surviving candidates adjacent to a dropped node
@@ -1324,7 +1002,7 @@ class KCoreMaintainer:
                 .join(cur, ["node"], "left_semi")
             )
             if rounds % 4 == 0:
-                cur = self._ck(cur)  # bound the anti-join chain depth
+                cur = self._scratch.ck(cur)  # bound the anti-join chain depth
         raise RuntimeError("k-core peel did not converge")
 
     # -- the maintenance step ------------------------------------------ #
@@ -1340,7 +1018,7 @@ class KCoreMaintainer:
     def _process_batch(
         self, insert: DataFrame | None, delete: DataFrame | None
     ) -> DataFrame:
-        self._reap()
+        self._scratch.reap(keep=(self.core,))
         old_core = self.core
         # ONE tagged-delta checkpoint covers both sides; the symmetrized
         # trace part and the per-side endpoint sets are lazy views over it
@@ -1383,11 +1061,9 @@ class KCoreMaintainer:
                     DIFF,
                 )
             )
-            # Hand the delta checkpoint's release handle to the trace part:
             # TraceView.compact frees parts via release_checkpoint, and the
             # lazy sym view would otherwise leak the backing blocks.
-            sym_part._ckpt_rdds = list(getattr(delta, "_ckpt_rdds", ()))
-            self.edges.append(sym_part)
+            self.edges.append(self._scratch.hand_off(delta, sym_part))
 
         core = old_core
         if dele is not None:
@@ -1418,7 +1094,7 @@ class KCoreMaintainer:
                     "left_semi",
                 )
 
-            seeds, n_seeds = self._ckn(
+            seeds, n_seeds = self._scratch.ckn(
                 eligible(
                     ins.select(F.col("src").alias("node"))
                     .unionByName(ins.select(F.col("dst").alias("node")))
@@ -1432,7 +1108,7 @@ class KCoreMaintainer:
                     acc = cand_parts[0]
                     for p in cand_parts[1:]:
                         acc = acc.unionByName(p)
-                    nxt, n_nxt = self._ckn(
+                    nxt, n_nxt = self._scratch.ckn(
                         eligible(
                             self._support_from(
                                 frontier.select(F.col("node").alias("src"))
@@ -1451,7 +1127,7 @@ class KCoreMaintainer:
                 for p in cand_parts[1:]:
                     cands = cands.unionByName(p)
                 joined = self._peel(cands, fixed=core)
-                core = self._ck(core.unionByName(joined))
+                core = self._scratch.ck(core.unionByName(joined))
         o = old_core.withColumn("__o", F.lit(1))
         n_ = core.withColumn("__n", F.lit(1))
         j = o.join(n_, ["node"], "full_outer")
@@ -1464,7 +1140,7 @@ class KCoreMaintainer:
                 )
             )
         )
-        out = tracked_local_checkpoint(out)
+        out = self._scratch.ck(out)
         self.core = core
         return out
 
@@ -1496,6 +1172,4 @@ class KCoreMaintainer:
 
     def release(self) -> None:
         self.edges.release()
-        for df in self._spent:
-            release_checkpoint(df)
-        self._spent = []
+        self._scratch.reap()

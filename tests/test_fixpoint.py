@@ -151,7 +151,9 @@ def test_maintained_transitive_closure_mixed_batches(spark):
 
 def test_maintained_fixpoint_bucketed_state(spark, tmp_path):
     # Bucketed parquet input trace: same parity on the durable state shape.
-    edges = {(0, 1), (1, 2), (2, 3), (4, 5)}
+    # Inputs are multisets: the seed carries (4,5) twice and (5,6) arrives
+    # twice in one batch, so each edge survives its first retraction.
+    seed = [(0, 1), (1, 2), (2, 3), (4, 5), (4, 5)]
     mf = MaintainedFixpoint(
         spark,
         fact_cols=["node"],
@@ -159,24 +161,35 @@ def test_maintained_fixpoint_bucketed_state(spark, tmp_path):
         step=lambda f, inp: f.withColumnRenamed("node", "src")
         .join(inp["edges"], ["src"])
         .select(F.col("dst").alias("node")),
-        inputs={
-            "edges": spark.createDataFrame(sorted(edges), "src long, dst long")
-        },
+        inputs={"edges": spark.createDataFrame(seed, "src long, dst long")},
         input_keys={"edges": ["src"]},
         compact_every=2,
         state_dir=str(tmp_path / "fx"),
         n_buckets=4,
     )
-    assert {r.node for r in mf.facts().collect()} == {0, 1, 2, 3}
-    # Cut 1->2, bridge 0->4: reach flips to {0,1,4,5}.
-    upd = spark.createDataFrame(
-        [(1, 2, -1), (0, 4, 1)], "src long, dst long, diff long"
-    )
-    deltas = {
-        (r.node, r.diff) for r in mf.process_batch({"edges": upd}).collect()
-    }
-    assert deltas == {(2, -1), (3, -1), (4, 1), (5, 1)}
-    assert {r.node for r in mf.facts().collect()} == {0, 1, 4, 5}
+    reach = {0, 1, 2, 3}
+    assert {r.node for r in mf.facts().collect()} == reach
+    batches = [
+        # Cut 1->2, bridge 0->4: reach flips to {0,1,4,5}.
+        ([(1, 2, -1), (0, 4, 1)], {(2, -1), (3, -1), (4, 1), (5, 1)}),
+        # Duplicated seed edge retracted once.
+        ([(4, 5, -1)], set()),
+        # Edge inserted twice in one batch, then retracted once.
+        ([(5, 6, 1), (5, 6, 1)], {(6, 1)}),
+        ([(5, 6, -1)], set()),
+        # The last copies go.
+        ([(4, 5, -1), (5, 6, -1)], {(5, -1), (6, -1)}),
+    ]
+    for rows, want in batches:
+        upd = spark.createDataFrame(rows, "src long, dst long, diff long")
+        deltas = {
+            (r.node, r.diff) for r in mf.process_batch({"edges": upd}).collect()
+        }
+        assert deltas == want, rows
+        reach = (reach | {n for n, d in want if d > 0}) - {
+            n for n, d in want if d < 0
+        }
+        assert {r.node for r in mf.facts().collect()} == reach
     mf.release()
 
 

@@ -460,3 +460,61 @@ def test_kcore_maintainer_matches_recompute(spark, tmp_path, bucketed):
         assert got_edges == want_edges
         prev = cur
     km.release()
+
+
+def test_maintainers_release_scratch(spark):
+    # Per-batch checkpoints are released at the next batch, and release()
+    # frees the rest: a toggle stream (delete an edge, re-insert it) returns
+    # to the same state every two batches, so the persisted-RDD count must
+    # not grow with the number of batches.
+    from differential_dataflow_spark.collection import DIFF
+    from differential_dataflow_spark.streaming.maintain import (
+        IncrementalBFS,
+        IncrementalReachability,
+        KCoreMaintainer,
+    )
+
+    def persisted():
+        return spark.sparkContext._jsc.sc().getPersistentRDDs().size()
+
+    def edges(rows):
+        return spark.createDataFrame(rows, "src long, dst long")
+
+    chain = edges([(0, 1), (1, 2), (2, 3), (3, 4), (1, 5)])
+    two_triangles = edges([(0, 1), (1, 2), (2, 0), (2, 3), (3, 4), (4, 2)])
+    cut, bridge = edges([(1, 2)]), edges([(3, 4)])
+
+    def reachability():
+        # A MaintainedFixpoint program (streaming/fixpoint.py).
+        ir = IncrementalReachability(
+            spark, chain, spark.createDataFrame([(0,)], "node long"),
+            compact_every=2,
+        )
+        return ir, lambda dele: ir.process_batch(
+            cut.withColumn(DIFF, F.lit(-1 if dele else 1))
+        )
+
+    def bfs():
+        ib = IncrementalBFS(spark, chain, root=0, compact_every=2)
+        return ib, lambda dele: (
+            ib.process_batch(None, cut) if dele else ib.process_batch(cut, None)
+        )
+
+    def kcore():
+        km = KCoreMaintainer(spark, two_triangles, k=2, compact_every=2)
+        return km, lambda dele: (
+            km.process_batch(None, bridge)
+            if dele
+            else km.process_batch(bridge, None)
+        )
+
+    for make in (reachability, bfs, kcore):
+        before = persisted()
+        m, batch = make()
+        seen = []
+        for i in range(12):
+            assert batch(i % 2 == 0).count() > 0
+            seen.append(persisted())
+        assert max(seen[8:]) <= max(seen[:4]), (make.__name__, seen)
+        m.release()
+        assert persisted() <= before, make.__name__
