@@ -1948,9 +1948,14 @@ def graph_bfs_maintained(spark, sf_dir):
     marquee demo (examples/bfs.rs: random edge changes streamed through an
     iterate scope). Edges arrive in three batches; batch 2 both inserts and
     DELETES a slice that batch 1 carried prematurely (the slice returns in
-    batch 3, so the final edge set equals the oracle's). Per-batch
-    update-stream exactness is pinned in pytest; here the maintained final
-    distance map must match the recursive-CTE BFS."""
+    batch 3, so the final edge set equals the oracle's). ``IncrementalBFS``
+    (streaming/maintain.py) is the BFS program run on the generic
+    ``MaintainedFixpoint`` (streaming/fixpoint.py) over min-valued
+    ``(node, dist)`` facts: insertions run its decrease-only relaxation,
+    the deletion its delete-and-rederive over the old shortest-path DAG
+    with a dst-keyed rederive boundary. Per-batch update-stream exactness
+    is pinned in pytest; here the maintained final distance map must match
+    the recursive-CTE BFS."""
     from differential_dataflow_spark.session import (
         release_checkpoint,
         tracked_local_checkpoint,

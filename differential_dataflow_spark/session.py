@@ -242,8 +242,8 @@ class Scratch:
     def __init__(self):
         self._held: list = []
 
-    def ck(self, df):
-        out = tracked_local_checkpoint(df)
+    def ck(self, df, eager: bool = True):
+        out = tracked_local_checkpoint(df, eager=eager)
         self._held.append(out)
         return out
 

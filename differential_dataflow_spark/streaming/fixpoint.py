@@ -6,13 +6,13 @@ loop body "infinitely often" under timestamps with an iteration coordinate,
 so ANY program written against collections is incrementally maintained when
 its inputs change (src/operators/iterate.rs:49-127; examples/bfs.rs
 demonstrates maintenance under arbitrary edge updates). This module is
-the *general* engine for the monotone, distinct-valued class via
-**delete-and-rederive** (DRed — Gupta, Mumick & Subrahmanian, "Maintaining
-Views Incrementally", SIGMOD 1993 — the classic public-literature
-counterpart of the reference's second-order differentials).
-``IncrementalReachability`` (streaming/maintain.py) is one program run on
-it; ``IncrementalBFS`` (min-valued facts) and ``KCoreMaintainer`` (a
-threshold, not monotone) still hand-derive their affected-region repair.
+the *general* engine for monotone programs over distinct-valued or
+min-valued facts via **delete-and-rederive** (DRed — Gupta, Mumick &
+Subrahmanian, "Maintaining Views Incrementally", SIGMOD 1993 — the classic
+public-literature counterpart of the reference's second-order
+differentials). ``IncrementalReachability`` and ``IncrementalBFS``
+(streaming/maintain.py) are programs run on it; ``KCoreMaintainer`` (a
+threshold, not monotone) still hand-derives its affected-region repair.
 
 The user supplies a Datalog-shaped program:
 
@@ -27,6 +27,10 @@ The user supplies a Datalog-shaped program:
   predicate (each derivation uses at least one frontier premise), the
   standard semi-naive requirement — exactly the class the reference's
   ``iterate`` + ``distinct`` idiom covers.
+- ``min_col`` (optional) — make facts MIN-VALUED: one fact column is merged
+  by min per key (the other fact columns), the reference's ``iterate`` +
+  ``reduce(min)`` idiom (src/algorithms/graphs/bfs.rs: ``(node, dist)``
+  keyed by ``node``).
 
 Inputs are multisets: a row's multiplicity is the sum of its diffs, and a
 row is present while that sum is positive. Maintenance per batch of input
@@ -40,15 +44,26 @@ updates ``(payload..., diff)``:
    came from. D closes under ``step(D, old_inputs)`` intersected with the
    derived set, so work is O(|affected region|), not O(|derived|). Facts
    in ``axioms(new)`` survive the batch, so D never enters or passes
-   through them (a reachability root is never suspect).
+   through them (a reachability root is never suspect). The intersection
+   is on whole facts, so for min-valued facts a fact is suspect only when
+   a suspect premise derives its exact value (BFS: the shortest-path DAG).
 2. REDERIVE — within D, from the untouched boundary: ``step(derived \\ D,
    new_inputs) ∩ D``, closed under ``step(R, new_inputs) ∩ D``. Facts with
    a surviving alternative derivation come back; ``removed = D \\ R`` is
-   emitted with diff −1.
+   emitted with diff −1. Min-valued facts are bounded by D's keys instead,
+   at values no lower than the key's old one (a lower value can only come
+   from an inserted row, which phase 3 propagates), and merged by min: a
+   key rederived at a higher value retracts the old value and asserts the
+   new one.
 3. INSERT — seeds are the new axioms plus, per input carrying insertions,
    ``step(derived, inputs with that relation restricted to its inserted
    rows)``, minus already-derived; then the ordinary semi-naive expansion
-   over the post-batch inputs. O(|newly derived region|).
+   over the post-batch inputs. O(|newly derived region|). For min-valued
+   facts a candidate is new when its key is absent or its value is lower;
+   an improvement retracts the key's old value.
+
+Every change is sealed into the derived trace as a tagged ``(facts...,
+diff)`` part, and a batch returns the consolidation of the parts it sealed.
 
 Scale shape: inputs and the derived set live in :class:`TraceView` spines
 (optionally bucketed parquet, so per-batch reads prune to touched
@@ -64,6 +79,7 @@ set) pass ``rederive_seeds`` to override it.
 from __future__ import annotations
 
 from collections.abc import Callable, Mapping, Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -91,6 +107,10 @@ def _small(frontier: DataFrame, n_rows: int) -> DataFrame:
     if n_rows <= BROADCAST_FRONTIER_ROWS:
         return F.broadcast(frontier)
     return frontier
+
+
+def _union(dfs: list[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, dfs)
 
 
 class _Reads(Mapping):
@@ -124,7 +144,7 @@ class MaintainedFixpoint:
         input_keys: Mapping[str, Sequence[str]] | None = None,
         rederive_seeds: Callable[[DataFrame, DataFrame, Inputs], DataFrame]
         | None = None,
-        uses_derived: bool = False,
+        min_col: str | None = None,
         compact_every: int = 16,
         state_dir: str | None = None,
         n_buckets: int = 64,
@@ -137,22 +157,35 @@ class MaintainedFixpoint:
         program-specific boundary — facts of ``suspect`` derivable in one
         step from ``kept`` (defaults to ``step(kept, new_inputs)``).
 
-        ``uses_derived=True`` lifts the LINEAR restriction: the step may
-        reference the derived relation itself through the reserved input
-        name ``"$derived"`` (delta-rule discipline — e.g. transitive
-        closure by squaring: ``step = frontier ⋈ $derived ∪ $derived ⋈
-        frontier``). Contract: every occurrence of the recursive relation
-        must appear in FRONTIER position in at least one union term (the
-        standard non-linear semi-naive delta-rule requirement); the engine
-        binds ``$derived`` to the semantically current fact set — all facts
-        so far during expansion, the pre-batch set during the overdelete
-        closure, and kept-plus-rederived-so-far during rederivation."""
+        ``min_col`` names the fact column merged by MIN: facts are then
+        keyed by the other fact columns, each key holds only its least
+        value, and the step must be monotone in that value (a lower premise
+        never derives a higher conclusion — BFS's ``dist + 1``), so stepping
+        each key's least fact suffices. A candidate counts as new when its
+        key is absent or its value is lower, and an improvement seals
+        ``(key, old, −1)`` with ``(key, new, +1)``, so the update stream
+        carries retraction pairs like ``count``'s. Default: distinct-valued
+        facts (a fact is derived or not).
+
+        The step may reference the derived relation itself through the
+        reserved input name ``"$derived"``, which lifts the LINEAR
+        restriction (delta-rule discipline — e.g. transitive closure by
+        squaring: ``step = frontier ⋈ $derived ∪ $derived ⋈ frontier``).
+        Whether it does is recorded from one dry build of the step's plan
+        at construction (no job). Contract: every occurrence of the
+        recursive relation must appear in FRONTIER position in at least
+        one union term (the standard non-linear semi-naive delta-rule
+        requirement); the engine binds ``$derived`` to the semantically
+        current fact set — all facts so far during expansion, the pre-batch
+        set during the overdelete closure, and kept-plus-rederived-so-far
+        during rederivation."""
         self.spark = spark
         self.fact_cols = list(fact_cols)
+        self.min_col = min_col
+        self.key_cols = [c for c in self.fact_cols if c != min_col]
         self.axioms = axioms
         self.step = step
         self.rederive_seeds = rederive_seeds
-        self.uses_derived = uses_derived
         self.max_iters = max_iters
         self._scratch = Scratch()
 
@@ -175,13 +208,18 @@ class MaintainedFixpoint:
         self.derived = TraceView(spark, compact_every=compact_every)
         self.derived.key = self.fact_cols
         self._derived_neg = False
+        self._sealed: list[DataFrame] = []  # parts sealed by this batch
 
         supports = self._supports()
         # Which inputs the axioms read: a batch that changes none of them
         # leaves the axioms as they were, and skips the axiom diffs.
         reads = _Reads(supports)
-        base_axioms = axioms(reads).select(*self.fact_cols).distinct()
+        base_axioms = self._merge(axioms(reads))
         self._axiom_inputs = reads.read
+        # Whether the step reads the derived relation itself (non-linear).
+        reads = _Reads({**supports, "$derived": base_axioms})
+        step(base_axioms, reads)
+        self.uses_derived = "$derived" in reads.read
         n_state = max(
             (tv.base_rows or 0 for tv in self.inputs.values()), default=None
         )
@@ -197,16 +235,27 @@ class MaintainedFixpoint:
                 supports,
             )
             self.derived.compact()  # fold the initial rounds into one base
+            self._derived_neg = False
 
     # -- bookkeeping ---------------------------------------------------- #
 
-    def _append_derived(self, ck: DataFrame, diff: int) -> None:
-        """Seal a checkpointed fact set as a derived-trace part; the part
-        takes ownership of the checkpoint blocks."""
-        part = ck.select(
-            *self.fact_cols, F.lit(diff).cast("long").alias(DIFF)
-        )
-        self.derived.append(self._scratch.hand_off(ck, part))
+    def _seal(self, part: DataFrame) -> tuple[DataFrame, int]:
+        """Checkpoint a ``(facts..., diff)`` part and, unless it is empty,
+        seal it into the derived trace, which takes its blocks. One job:
+        the materializing aggregate counts the facts the part asserts and
+        those it retracts. Returns the asserted facts (the next frontier)
+        and their count."""
+        part = self._scratch.ck(part, eager=False)
+        row = part.agg(
+            F.sum((F.col(DIFF) > 0).cast("long")).alias("n_pos"),
+            F.sum((F.col(DIFF) < 0).cast("long")).alias("n_neg"),
+        ).collect()[0]
+        n_pos, n_neg = int(row["n_pos"] or 0), int(row["n_neg"] or 0)
+        if n_pos or n_neg:
+            self.derived.append(self._scratch.hand_off(part, part))
+            self._sealed.append(part)
+            self._derived_neg |= n_neg > 0
+        return part.filter(F.col(DIFF) > 0).select(*self.fact_cols), n_pos
 
     def release(self) -> None:
         self._scratch.reap()
@@ -235,6 +284,16 @@ class MaintainedFixpoint:
     def _supports(self) -> dict[str, DataFrame]:
         return {n: self._input_support(n) for n in self.inputs}
 
+    def _fold(self, supports: Inputs, which: Mapping[str, bool]) -> Inputs:
+        """Supports for a deletion batch's loop rounds (overdelete, then
+        rederive and insert): each input in ``which`` is folded to its
+        positive support ONCE (a lazy checkpoint, materialized by its first
+        reader) instead of every round's read re-aggregating its trace."""
+        return {
+            n: self._scratch.ck(s, eager=False) if which[n] else s
+            for n, s in supports.items()
+        }
+
     def _derived_support(self) -> DataFrame:
         return self._pos(
             self.derived.view(), self.fact_cols, self._derived_neg
@@ -248,30 +307,114 @@ class MaintainedFixpoint:
         out["$derived"] = derived
         return out
 
+    # -- facts: distinct-valued or min-valued ------------------------------ #
+
+    def _merge(self, cands: DataFrame) -> DataFrame:
+        """One fact per distinct candidate, or per key at its least value."""
+        cands = cands.select(*self.fact_cols)
+        if self.min_col is None:
+            return cands.distinct()
+        out = cands.groupBy(*self.key_cols).agg(
+            F.min(self.min_col).alias(self.min_col)
+        )
+        if out.columns != self.fact_cols:
+            out = out.select(*self.fact_cols)
+        return out
+
+    def _by_key(
+        self, cands: DataFrame, other: DataFrame, value_test, how: str
+    ) -> DataFrame:
+        """Min-valued facts only: join ``cands`` against ``other`` on the
+        key, with ``value_test(cand value, other value)`` as the extra
+        condition. ``other`` is a small (broadcast) fact set."""
+        o = {c: f"__o_{c}" for c in self.fact_cols}
+        other = F.broadcast(
+            other.select(*(F.col(c).alias(a) for c, a in o.items()))
+        )
+        cond = [F.col(k) == F.col(o[k]) for k in self.key_cols]
+        cond.append(value_test(F.col(self.min_col), F.col(o[self.min_col])))
+        return cands.join(other, reduce(lambda a, b: a & b, cond), how)
+
+    def _fresh(self, cands: DataFrame, seen: DataFrame) -> DataFrame:
+        """Candidates ``seen`` does not already cover: absent facts, or
+        (min-valued) keys absent from ``seen`` or at a lower value."""
+        if self.min_col is None:
+            return cands.join(seen, self.fact_cols, "left_anti")
+        return self._by_key(cands, seen, lambda v, s: s <= v, "left_anti")
+
+    def _within_suspect(
+        self, cands: DataFrame, suspect: DataFrame
+    ) -> DataFrame:
+        """The rederive bound: candidates for suspect facts, or (min-valued)
+        for suspect keys at no lower a value than the key's old one."""
+        if self.min_col is None:
+            return cands.join(F.broadcast(suspect), self.fact_cols, "left_semi")
+        return self._by_key(cands, suspect, lambda v, s: v >= s, "left_semi")
+
+    def _improve(self, cands: DataFrame, current: DataFrame) -> DataFrame:
+        """The part that adds merged ``cands`` to the ``current`` facts:
+        +1 per fresh fact and, for an improved min-valued key, −1 for the
+        value it held (``current`` holds one fact per key)."""
+        one = F.lit(1).cast("long").alias(DIFF)
+        if self.min_col is None:
+            return self._fresh(cands, current).select(*self.fact_cols, one)
+        v = self.min_col
+        old = current.select(*self.key_cols, F.col(v).alias("__old"))
+        better = cands.join(old, self.key_cols, "left").filter(
+            F.col("__old").isNull() | (F.col(v) < F.col("__old"))
+        )
+        minus_one = F.lit(-1).cast("long").alias(DIFF)
+        pair = F.array(
+            F.struct(F.col(v).alias(v), one),
+            F.struct(F.col("__old").alias(v), minus_one),
+        )
+        rows = better.select(
+            *self.key_cols,
+            F.inline(F.filter(pair, lambda r: r[v].isNotNull())),
+        )
+        if rows.columns != [*self.fact_cols, DIFF]:
+            rows = rows.select(*self.fact_cols, DIFF)
+        return rows
+
+    def _replace(self, suspect: DataFrame, rederived: DataFrame) -> DataFrame:
+        """The part taking the suspect facts to the rederived ones: −1 per
+        suspect fact not rederived at its value and, for min-valued facts,
+        +1 per key rederived at a new value (distinct-valued rederivation
+        stays inside the suspect set)."""
+        if self.min_col is not None:
+            rederived = self._merge(rederived)
+        out = suspect.join(rederived, self.fact_cols, "left_anti").select(
+            *self.fact_cols, F.lit(-1).cast("long").alias(DIFF)
+        )
+        if self.min_col is None:
+            return out
+        return out.unionByName(
+            rederived.join(suspect, self.fact_cols, "left_anti").select(
+                *self.fact_cols, F.lit(1).cast("long").alias(DIFF)
+            )
+        )
+
     # -- semi-naive loops -------------------------------------------------- #
 
     def _expand(
         self, frontier: DataFrame, n_frontier: int, supports: Inputs
-    ) -> list[DataFrame]:
+    ) -> None:
         """Ordinary semi-naive expansion: derive from ``frontier`` until no
-        new facts; each round's new facts are appended to the derived trace
-        and returned. One counted-checkpoint job per round."""
-        parts: list[DataFrame] = []
+        new facts; each round's changes are sealed into the derived trace.
+        One checkpoint job per round (:meth:`_seal`)."""
         for _ in range(self.max_iters):
             if n_frontier == 0:
-                return parts
+                return
             # Non-linear steps see ALL facts so far (semi-naive "full"
             # relation) — rebound every round as parts accumulate.
-            sup = self._bind(supports, self._derived_support())
-            new, n_frontier = self._scratch.ckn(
-                self.step(_small(frontier, n_frontier), sup)
-                .select(*self.fact_cols)
-                .distinct()
-                .join(self._derived_support(), self.fact_cols, "left_anti")
+            current = self._derived_support()
+            sup = self._bind(supports, current)
+            frontier, n_frontier = self._seal(
+                self._improve(
+                    self._merge(self.step(_small(frontier, n_frontier), sup)),
+                    current,
+                )
             )
-            self._append_derived(new, 1)
-            parts.append(new)
-            frontier = new
         raise RuntimeError("fixpoint expansion did not converge")
 
     def _closure_within(
@@ -279,22 +422,18 @@ class MaintainedFixpoint:
         seeds: DataFrame,
         n_seeds: int,
         supports: Inputs,
-        bound: DataFrame,
-        broadcast_bound: bool = False,
+        within: Callable[[DataFrame], DataFrame],
         dyn_derived: DataFrame | None = None,
         exclude: DataFrame | None = None,
     ) -> DataFrame:
-        """Close ``seeds`` under ``step`` restricted to ``bound`` minus
-        ``exclude`` (facts the closure neither enters nor passes through);
-        returns the closure as the union of its checkpointed rounds.
-        ``broadcast_bound`` only when
-        the bound is known small (the suspect set) — the overdelete closure's
-        bound is the WHOLE derived set and must stream, not broadcast.
+        """Close ``seeds`` under ``step`` restricted by ``within`` (the
+        region's bound on a round's candidates) minus ``exclude`` (facts the
+        closure neither enters nor passes through); returns the closure as
+        the union of its checkpointed rounds.
         ``dyn_derived`` (non-linear rederivation only): bind ``$derived`` to
         ``dyn_derived ∪ closure-so-far``, rebound each round — rederiving
         through a still-suspect fact would keep facts alive via dead
         derivations, so only kept-plus-already-rederived facts qualify."""
-        bnd = F.broadcast(bound) if broadcast_bound else bound
         acc, frontier, n_front = seeds, seeds, n_seeds
         for _ in range(self.max_iters):
             if n_front == 0:
@@ -305,12 +444,11 @@ class MaintainedFixpoint:
                 if dyn_derived is not None
                 else supports
             )
+            cands = self.step(_small(frontier, n_front), sup)
             frontier, n_front = self._scratch.ckn(
-                self.step(_small(frontier, n_front), sup)
-                .select(*self.fact_cols)
-                .distinct()
-                .join(bnd, self.fact_cols, "left_semi")
-                .join(seen, self.fact_cols, "left_anti")
+                self._fresh(
+                    self._merge(within(cands.select(*self.fact_cols))), seen
+                )
             )
             acc = acc.unionByName(frontier)
         raise RuntimeError("closure did not converge")
@@ -323,11 +461,18 @@ class MaintainedFixpoint:
         """Apply one batch of input updates (per input: payload columns +
         ``diff``, summed per payload row) and return the derived-fact update
         stream ``(fact_cols..., diff)``. Valid until the next call."""
+        unknown = sorted(set(updates) - set(self.inputs))
+        if unknown:
+            raise ValueError(
+                f"updates for unknown input(s) {unknown}; the program's "
+                f"inputs are {sorted(self.inputs)}"
+            )
         with micro_batch_scope(self.spark):
             return self._process_batch(updates)
 
     def _process_batch(self, updates: Mapping[str, DataFrame]) -> DataFrame:
         self._scratch.reap()
+        self._sealed = []
         # Compact BEFORE capturing support views: TraceView views are valid
         # only until the next append/compact, and the old-support snapshots
         # below must survive the whole batch. A compaction folds the ±1
@@ -340,9 +485,9 @@ class MaintainedFixpoint:
             if tv.maybe_compact():
                 self._input_neg[name] = False
 
+        old_neg = dict(self._input_neg)
         old_supports = self._supports()
         derived_old = self._derived_support()
-        ax_old = self.axioms(old_supports).select(*self.fact_cols).distinct()
 
         dels: dict[str, DataFrame] = {}
         inss: dict[str, DataFrame] = {}
@@ -375,20 +520,22 @@ class MaintainedFixpoint:
             if n_ins_rows:
                 inss[name] = d.filter(F.col(DIFF) > 0).select(*payload)
 
-        new_supports = self._supports()
+        if dels:
+            old_supports = self._fold(old_supports, old_neg)
+        new_supports = self._fold(
+            self._supports(), {n: n in dels for n in self.inputs}
+        )
+        ax_old = self._merge(self.axioms(old_supports))
         ax_del = any(name in dels for name in self._axiom_inputs)
         ax_ins = any(name in inss for name in self._axiom_inputs)
         ax_new = ax_old
         if ax_del or ax_ins:
-            ax_new = self._scratch.ck(
-                self.axioms(new_supports).select(*self.fact_cols).distinct()
-            )
+            ax_new = self._scratch.ck(self._merge(self.axioms(new_supports)))
 
         # Phase 1: OVERDELETE — suspect seeds from retracted axioms and from
         # derivations through each input's deleted rows. Skipped outright on
         # insert-only batches (axioms are monotone in the inputs, so none
         # can retract without a deletion).
-        removed, n_removed = self.derived.view().limit(0), 0
         if dels:
             seed_parts = (
                 [ax_old.join(ax_new, self.fact_cols, "left_anti")]
@@ -401,20 +548,20 @@ class MaintainedFixpoint:
                 seed_parts.append(
                     self.step(derived_old, restricted).select(*self.fact_cols)
                 )
-            seeds = seed_parts[0]
-            for p in seed_parts[1:]:
-                seeds = seeds.unionByName(p)
+
+            def in_derived(cands: DataFrame) -> DataFrame:
+                # The whole derived set: streamed, never broadcast.
+                return cands.join(derived_old, self.fact_cols, "left_semi")
+
             seeds, n_seeds = self._scratch.ckn(
-                seeds.distinct()
-                .join(derived_old, self.fact_cols, "left_semi")
-                .join(ax_new, self.fact_cols, "left_anti")
+                self._fresh(self._merge(in_derived(_union(seed_parts))), ax_new)
             )
             if n_seeds:
                 suspect = self._closure_within(
                     seeds,
                     n_seeds,
                     self._bind(old_supports, derived_old),
-                    bound=derived_old,
+                    within=in_derived,
                     exclude=ax_new,
                 )
                 # Phase 2: REDERIVE within the suspect region from the kept
@@ -426,66 +573,51 @@ class MaintainedFixpoint:
                     lambda kept, sus, sup: self.step(kept, sup)
                 )
                 r0, n_r0 = self._scratch.ckn(
-                    boundary_fn(kept, suspect, self._bind(new_supports, kept))
-                    .select(*self.fact_cols)
-                    .join(F.broadcast(suspect), self.fact_cols, "left_semi")
-                    .distinct()
+                    self._merge(
+                        self._within_suspect(
+                            boundary_fn(
+                                kept, suspect, self._bind(new_supports, kept)
+                            ).select(*self.fact_cols),
+                            suspect,
+                        )
+                    )
                 )
                 rederived = self._closure_within(
                     r0,
                     n_r0,
                     new_supports,
-                    bound=suspect,
-                    broadcast_bound=True,
+                    within=lambda c: self._within_suspect(c, suspect),
                     dyn_derived=kept if self.uses_derived else None,
                 )
-                removed, n_removed = self._scratch.ckn(
-                    suspect.join(rederived, self.fact_cols, "left_anti")
-                )
-                if n_removed:
-                    self._append_derived(removed, -1)
-                    self._derived_neg = True
+                self._seal(self._replace(suspect, rederived))
 
         # Phase 3: INSERT — new axioms plus derivations through each input's
         # inserted rows, then the ordinary semi-naive expansion. Skipped on
         # delete-only batches.
-        added_parts: list[DataFrame] = []
         if inss:
             derived_now = self._derived_support()
-            ins_parts = (
-                [ax_new.join(ax_old, self.fact_cols, "left_anti")]
-                if ax_ins
-                else []
-            )
+            ins_parts = [self._fresh(ax_new, ax_old)] if ax_ins else []
             for name, ins_df in inss.items():
                 restricted = dict(self._bind(new_supports, derived_now))
                 restricted[name] = F.broadcast(ins_df)
                 ins_parts.append(
                     self.step(derived_now, restricted).select(*self.fact_cols)
                 )
-            ins_seeds = ins_parts[0]
-            for p in ins_parts[1:]:
-                ins_seeds = ins_seeds.unionByName(p)
-            ins_seeds, n_ins = self._scratch.ckn(
-                ins_seeds.distinct().join(
-                    derived_now, self.fact_cols, "left_anti"
-                )
+            frontier, n_ins = self._seal(
+                self._improve(self._merge(_union(ins_parts)), derived_now)
             )
-            if n_ins:
-                self._append_derived(ins_seeds, 1)
-                added_parts = [ins_seeds] + self._expand(
-                    ins_seeds, n_ins, new_supports
-                )
+            self._expand(frontier, n_ins, new_supports)
 
-        out = removed.select(*self.fact_cols, F.lit(-1).cast("long").alias(DIFF))
-        for p in added_parts:
-            out = out.unionByName(
-                p.select(*self.fact_cols, F.lit(1).cast("long").alias(DIFF))
-            )
-        # Consolidate the batch's update stream: a fact overdeleted in phase
-        # 1 can be re-derived in phase 3 through brand-new intermediate facts
-        # (outside the suspect region, so phase 2's D-bounded rederive cannot
-        # see it) — the −1/+1 pair must cancel. Delta-sized shuffle.
+        # The batch's update stream is the consolidation of what it sealed:
+        # a fact overdeleted in phase 1 can be re-derived in phase 3 through
+        # brand-new intermediate facts (outside the suspect region, so phase
+        # 2's D-bounded rederive cannot see it) — the −1/+1 pair must
+        # cancel. Delta-sized shuffle.
+        out = (
+            _union(self._sealed)
+            if self._sealed
+            else self.derived.view().limit(0)
+        )
         return (
             out.groupBy(*self.fact_cols)
             .agg(F.sum(DIFF).alias(DIFF))

@@ -18,8 +18,15 @@ or re-reads state from disk:
   are looked up (broadcast semijoin of the delta's key set against the
   key-partitioned state) and the operator emits the ``(key, old, -1),
   (key, new, +1)`` retraction pairs.
-- ``DeltaJoin`` (streaming/join.py) gains an in-memory mode backed by two
-  TraceViews — pass ``state_dir=None``.
+- ``IncrementalReachability`` and ``IncrementalBFS`` — graph programs run on
+  the generic maintained fixpoint (streaming/fixpoint.py): reachability over
+  distinct-valued ``node`` facts, BFS over min-valued ``(node, dist)`` facts,
+  both with the dst-keyed rederive boundary.
+- ``KCoreMaintainer`` — the k-core under edge changes (a threshold, not a
+  monotone program): shrink/grow peel cascades over an edge TraceView.
+
+``DeltaJoin`` (streaming/join.py) keeps its in-memory mode
+(``state_dir=None``) in two TraceViews.
 
 At cluster scale the base would be a key-bucketed cached table (or the
 parquet Arrangement behind an executor-side cache); the delta parts and the
@@ -29,6 +36,7 @@ broadcast-semijoin lookup shape are unchanged.
 from __future__ import annotations
 
 from collections.abc import Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -240,35 +248,73 @@ class TraceView:
         self.parts = []
 
 
-def _reach_step(frontier: DataFrame, inp) -> DataFrame:
-    """``reach(y) :- reach(x), edge(x, y)`` applied to frontier facts. A
-    semi-join, so the planner sizes the result by the edge relation, not by
-    a join product: the derived trace stays small enough in its estimates
-    for the anti-join against it to be planned as a broadcast."""
-    return (
-        inp["edge"]
-        .join(frontier.select(F.col("node").alias("src")), ["src"], "left_semi")
-        .select(F.col("dst").alias("node"))
-    )
+def _out_edges(tails: DataFrame, edges: DataFrame) -> DataFrame:
+    """``edges`` out of ``tails`` — ``src`` plus the tail's value columns,
+    if any, which the edges then carry. A semi-join when there are none, so
+    the planner sizes the result by the edge relation, not by a join
+    product: the derived trace stays small enough in its estimates for the
+    anti-join against it to be planned as a broadcast."""
+    if tails.columns == ["src"]:
+        return edges.join(tails, ["src"], "left_semi")
+    return edges.join(tails, ["src"])
 
 
-def _reach_boundary(kept: DataFrame, suspect: DataFrame, inp) -> DataFrame:
-    """Rederive seeds keyed by dst: only edges INTO the suspect set whose
-    tail is kept can rederive a suspect node, so the kept region is probed
-    by the (small) tail set instead of being joined whole — the reference's
-    arrange-by-reverse-key. Every join streams the big side map-side
-    against a broadcast set bounded by the suspect region."""
+def _into_suspect(kept: DataFrame, suspect: DataFrame, inp) -> DataFrame:
+    """The dst-keyed rederive boundary: only edges INTO the suspect set
+    whose tail is kept can rederive a suspect node, so the kept region is
+    probed by the (small) tail set instead of being joined whole — the
+    reference's arrange-by-reverse-key. Every join streams the big side
+    map-side against a broadcast set bounded by the suspect region."""
     into = inp["edge"].join(
         F.broadcast(suspect.select(F.col("node").alias("dst"))),
         ["dst"],
         "left_semi",
     )
-    tails = kept.select(F.col("node").alias("src")).join(
+    tails = kept.withColumnRenamed("node", "src").join(
         F.broadcast(into.select("src").distinct()), ["src"], "left_semi"
     )
-    return into.join(F.broadcast(tails), ["src"], "left_semi").select(
-        F.col("dst").alias("node")
+    return _out_edges(F.broadcast(tails), into)
+
+
+def _reach_step(frontier: DataFrame, inp) -> DataFrame:
+    """``reach(y) :- reach(x), edge(x, y)`` applied to frontier facts."""
+    return _out_edges(
+        frontier.withColumnRenamed("node", "src"), inp["edge"]
+    ).select(F.col("dst").alias("node"))
+
+
+def _reach_boundary(kept: DataFrame, suspect: DataFrame, inp) -> DataFrame:
+    return _into_suspect(kept, suspect, inp).select(F.col("dst").alias("node"))
+
+
+def _edge_updates(
+    insert: DataFrame | None, delete: DataFrame | None
+) -> DataFrame | None:
+    """One ``(src, dst, diff)`` update frame: +1 per inserted edge, −1 per
+    deleted one (None when neither side is given)."""
+    sides = [
+        df.select("src", "dst", F.lit(diff).cast("long").alias(DIFF))
+        for df, diff in ((insert, 1), (delete, -1))
+        if df is not None
+    ]
+    return reduce(DataFrame.unionByName, sides) if sides else None
+
+
+def _bfs_hop(edges: DataFrame) -> DataFrame:
+    return edges.select(
+        F.col("dst").alias("node"), (F.col("dist") + 1).alias("dist")
     )
+
+
+def _bfs_step(frontier: DataFrame, inp) -> DataFrame:
+    """``dist(y) min= dist(x) + 1 :- dist(x), edge(x, y)``."""
+    return _bfs_hop(
+        _out_edges(frontier.withColumnRenamed("node", "src"), inp["edge"])
+    )
+
+
+def _bfs_boundary(kept: DataFrame, suspect: DataFrame, inp) -> DataFrame:
+    return _bfs_hop(_into_suspect(kept, suspect, inp))
 
 
 class IncrementalReachability:
@@ -351,30 +397,23 @@ class IncrementalBFS:
     — insertions and deletions — at cost proportional to the affected
     region, the reference's marquee maintenance demo (examples/bfs.rs +
     README.md:150-214, where random edge changes stream through an iterate
-    scope). The reference gets deletions "for free" from second-order
-    differentials; Spark has no feedback edge, so this uses the classic
-    dynamic-SSSP decomposition instead, each phase frontier-bounded:
+    scope).
 
-    1. DELETIONS — nodes whose shortest path might have used a deleted edge
-       = descendants of the deleted edges' heads in the OLD shortest-path
-       DAG (edges (u,v) with dist[v] = dist[u]+1): a semi-naive closure over
-       the SP-DAG, O(affected). Their distances are recomputed by
-       min-merge (Bellman-Ford) relaxation from the non-affected BOUNDARY
-       over the post-deletion edges, restricted to the affected set —
-       non-affected distances provably cannot change.
-    2. INSERTIONS — decrease-only relaxation seeded from inserted edges that
-       improve their head's distance; each round relaxes only the nodes
-       improved in the previous round, O(improved region).
+    The reference's program ``nodes.iterate(join(edges).concat(nodes)
+    .reduce(min))`` (src/algorithms/graphs/bfs.rs) run on :class:`~
+    differential_dataflow_spark.streaming.fixpoint.MaintainedFixpoint` over
+    min-valued ``(node, dist)`` facts: axiom ``(root, 0)``, step ``dist(y)
+    min= dist(x) + 1 :- edge(x, y)``. Deletions overdelete the old
+    shortest-path DAG below the deleted edges and rederive the affected
+    nodes from the kept boundary (the dst-keyed ``_bfs_boundary``: edges
+    into the affected set whose tail is kept); insertions run a
+    decrease-only relaxation from the improved heads.
 
     Emits the update stream ``(node, dist, diff)``: retractions of changed /
     vanished distances and assertions of the new ones — consolidating the
     outputs reproduces a from-scratch BFS of the final graph (pytest).
-    State: an edge TraceView keyed by src (bucketed parquet optional for
-    durable/larger-than-memory storage) and the current distance map. The
-    live edge multiset is consolidated ONCE per batch and reused by every
-    relaxation round — per-round re-consolidation of the trace was the
-    dominant shuffle cost; at warehouse scale that one fold is a
-    partition-wise (bucketed) aggregate.
+    Edges are a multiset: an edge inserted twice needs two retractions.
+    ``state_dir`` stores the edge trace as bucketed parquet (key ``src``).
     """
 
     def __init__(
@@ -387,326 +426,47 @@ class IncrementalBFS:
         n_buckets: int = 64,
         max_iters: int = 10_000,
     ):
-        self.spark = spark
-        self.root = root
-        self.max_iters = max_iters
-        # Every intermediate (closure parts, per-round relaxation maps, the
-        # previous distance map) is scratch: without the per-batch release
-        # the min-merge rounds leak one O(V) checkpoint per round.
-        self._scratch = Scratch()
-        self.edges = TraceView(
+        """``edges``: (src, dst). Runs the initial BFS (one-time O(graph)
+        cost, like any bulk load)."""
+        from differential_dataflow_spark.streaming.fixpoint import (
+            MaintainedFixpoint,
+        )
+
+        # Built in the JVM: a frame from a Python list is a Python RDD, and
+        # every round that reads the axioms would wait on Python workers.
+        origin = spark.range(1).select(
+            F.lit(root).cast("long").alias("node"),
+            F.lit(0).cast("long").alias("dist"),
+        )
+        self._fx = MaintainedFixpoint(
             spark,
+            fact_cols=["node", "dist"],
+            axioms=lambda inp: origin,
+            step=_bfs_step,
+            inputs={"edge": edges.select("src", "dst")},
+            input_keys={"edge": ["src"]},
+            rederive_seeds=_bfs_boundary,
+            min_col="dist",
             compact_every=compact_every,
-            bucket_path=(state_dir + "/edges") if state_dir else None,
+            state_dir=state_dir,
             n_buckets=n_buckets,
+            max_iters=max_iters,
         )
-        self.edges.seed(
-            edges.select("src", "dst", F.lit(1).cast("long").alias(DIFF)),
-            key=["src"],
-        )
-        # dist state: a checkpointed (node, dist) map, rewritten only in the
-        # affected region per batch (the rewrite unions untouched rows by
-        # reference, so the per-batch write is O(changed)).
-        start = self._scratch.ck(
-            spark.createDataFrame([(root, 0)], "node long, dist long")
-        )
-        with micro_batch_scope(spark, self.edges.base_rows):
-            self.dist = self._relax_down(
-                start, 1, None, self._scratch.ck(self._edges_pos())
-            )
-
-    # -- helpers ------------------------------------------------------- #
-
-    def _edges_pos(self) -> DataFrame:
-        """Current edge multiset's positive support (src, dst)."""
-        v = self.edges.view()
-        return (
-            v.groupBy("src", "dst")
-            .agg(F.sum(DIFF).alias("__w"))
-            .filter(F.col("__w") > 0)
-            .select("src", "dst")
-        )
-
-    def _relax_down(
-        self,
-        improved: DataFrame,
-        n_improved: int,
-        dist: DataFrame | None,
-        live: DataFrame,
-    ) -> DataFrame:
-        """Decrease-only min-merge relaxation over the pre-consolidated
-        ``live`` edge map (consolidating the trace ONCE per batch instead of
-        once per round was worth a shuffle per round): propagate better
-        distances from ``improved`` (node, dist, with known row count) until
-        no improvement. ONE driver job per round — the round's `better` set
-        is a counted checkpoint, so materialization and the convergence
-        probe share a job; dist stays a lazy anti-join chain over the
-        per-round checkpoints, materialized once per BATCH. Returns the new
-        checkpointed dist map. O(improved region) per round."""
-        dist = improved if dist is None else dist
-        rounds = 0
-        for _ in range(self.max_iters):
-            if n_improved == 0:
-                return self._scratch.ck(dist) if rounds else dist
-            cand = (
-                live.join(
-                    F.broadcast(improved.withColumnRenamed("node", "src")),
-                    ["src"],
-                )
-                .select(F.col("dst").alias("node"), (F.col("dist") + 1).alias("__nd"))
-                .groupBy("node")
-                .agg(F.min("__nd").alias("__nd"))
-            )
-            merged = cand.join(dist, ["node"], "left")
-            better, n_improved = self._scratch.ckn(
-                merged.filter(
-                    F.col("dist").isNull() | (F.col("__nd") < F.col("dist"))
-                ).select("node", F.col("__nd").alias("dist"))
-            )
-            dist = (
-                dist.join(better.select("node"), ["node"], "left_anti")
-                .unionByName(better)
-            )
-            improved = better
-            rounds += 1
-        raise RuntimeError("BFS relaxation did not converge")
-
-    # -- the maintenance step ------------------------------------------ #
 
     def process_batch(
         self, insert: DataFrame | None, delete: DataFrame | None
     ) -> DataFrame:
         """Apply edge insertions/deletions (src, dst); returns the distance
         update stream (node, dist, diff). Valid until the next call."""
-        with micro_batch_scope(self.spark):
-            return self._process_batch(insert, delete)
-
-    def _process_batch(
-        self, insert: DataFrame | None, delete: DataFrame | None
-    ) -> DataFrame:
-        self._scratch.reap(keep=(self.dist,))
-        old_dist = self.dist
-        # The pre-batch edge support is only consulted by the deletion
-        # phase's SP-DAG closure — skip its consolidation job entirely on
-        # insert-only batches.
-        edges_old = (
-            self._scratch.ck(self._edges_pos()) if delete is not None else None
-        )
-        # One TAGGED delta checkpoint covers both sides (one job instead of
-        # two) and doubles as the trace part — a plain checkpoint, NOT scratch:
-        # it is long-lived edge state, released by the TraceView's own
-        # compaction, and reaping it at the next batch would tear the edge
-        # trace's blocks out from under later rounds. ins/dele are lazy
-        # filters over it.
-        tagged = []
-        if insert is not None:
-            tagged.append(
-                insert.select("src", "dst")
-                .distinct()
-                .withColumn(DIFF, F.lit(1).cast("long"))
-            )
-        if delete is not None:
-            tagged.append(
-                delete.select("src", "dst")
-                .distinct()
-                .withColumn(DIFF, F.lit(-1).cast("long"))
-            )
-        delta = None
-        if tagged:
-            delta = tagged[0]
-            for t in tagged[1:]:
-                delta = delta.unionByName(t)
-            delta = tracked_local_checkpoint(delta)
-        ins = (
-            delta.filter(F.col(DIFF) > 0).select("src", "dst")
-            if insert is not None
-            else None
-        )
-        dele = (
-            delta.filter(F.col(DIFF) < 0).select("src", "dst")
-            if delete is not None
-            else None
-        )
-        self.edges.maybe_compact()
-        if delta is not None:
-            self.edges.append(delta)
-        # One consolidation of the post-change edge multiset serves every
-        # relaxation round this batch (at warehouse scale this fold is
-        # partition-wise and pruned; per-round re-consolidation was the
-        # dominant shuffle cost).
-        edges_new = self._scratch.ck(self._edges_pos())
-
-        dist = old_dist
-        n_affected = 0
-        if dele is not None:
-            du = old_dist.withColumnRenamed("node", "src").withColumnRenamed(
-                "dist", "__du"
-            )
-            dv = old_dist.withColumnRenamed("node", "dst").withColumnRenamed(
-                "dist", "__dv"
-            )
-            # Seeds: heads of deleted SP-DAG edges (dele is small — two
-            # broadcast probes into the old distance map, no shuffle of it).
-            seeds, n_front = self._scratch.ckn(
-                du.join(F.broadcast(dele), ["src"])
-                .join(dv, ["dst"])
-                .filter(F.col("__dv") == F.col("__du") + 1)
-                .select(F.col("dst").alias("node"), F.col("__dv").alias("dist"))
-                .distinct()
-            )
-            # Closure over the old SP-DAG, FRONTIER-DRIVEN — each round
-            # expands only the frontier's out-edges (bucket-pruned in the
-            # parquet mode) and keeps successors whose old dist is exactly
-            # frontier dist + 1; the SP-DAG is never materialized whole.
-            # One counted-checkpoint job per round.
-            parts = [seeds]
-            frontier = seeds
-            for _ in range(self.max_iters):
-                if n_front == 0:
-                    break
-                aff = parts[0]
-                for p in parts[1:]:
-                    aff = aff.unionByName(p)
-                nxt, n_front = self._scratch.ckn(
-                    edges_old.join(
-                        F.broadcast(frontier.withColumnRenamed("node", "src")),
-                        ["src"],
-                    )
-                    .select(
-                        F.col("dst").alias("node"),
-                        (F.col("dist") + 1).alias("__req"),
-                    )
-                    .join(old_dist, ["node"])
-                    .filter(F.col("dist") == F.col("__req"))
-                    .select("node", "dist")
-                    .distinct()
-                    .join(aff.select("node"), ["node"], "left_anti")
-                )
-                parts.append(nxt)
-                frontier = nxt
-            affected = parts[0].select("node")
-            for p in parts[1:]:
-                affected = affected.unionByName(p.select("node"))
-            affected, n_affected = self._scratch.ckn(
-                affected.filter(F.col("node") != self.root)
-            )
-            # Keep non-affected distances; re-derive the affected region by
-            # min-merge relaxation over the NEW edges, seeded from the
-            # BOUNDARY — kept nodes with an edge into the affected set (one
-            # map-side edge scan against the broadcast affected set; a
-            # dst-keyed secondary trace would prune it, mirroring the
-            # reference's arrange-by-reverse-key). Skipped outright when the
-            # deleted edges touched no shortest path (n_affected == 0).
-            if n_affected:
-                kept = self._scratch.ck(
-                    old_dist.join(affected, ["node"], "left_anti")
-                )
-                dist = kept
-                into_affected = (
-                    edges_new
-                    .join(
-                        F.broadcast(affected.withColumnRenamed("node", "dst")),
-                        ["dst"],
-                        "left_semi",
-                    )
-                    .select(F.col("src").alias("node"))
-                    .distinct()
-                )
-                boundary, n_front = self._scratch.ckn(
-                    kept.join(into_affected, ["node"], "left_semi")
-                )
-                for _ in range(self.max_iters):
-                    if n_front == 0:
-                        break
-                    cand = (
-                        edges_new.join(
-                            F.broadcast(
-                                boundary.withColumnRenamed("node", "src")
-                            ),
-                            ["src"],
-                        )
-                        .select(
-                            F.col("dst").alias("node"),
-                            (F.col("dist") + 1).alias("__nd"),
-                        )
-                        .join(F.broadcast(affected), ["node"], "left_semi")
-                        .groupBy("node")
-                        .agg(F.min("__nd").alias("__nd"))
-                    )
-                    merged = cand.join(dist, ["node"], "left")
-                    better, n_front = self._scratch.ckn(
-                        merged.filter(
-                            F.col("dist").isNull()
-                            | (F.col("__nd") < F.col("dist"))
-                        ).select("node", F.col("__nd").alias("dist"))
-                    )
-                    dist = (
-                        dist.join(better.select("node"), ["node"], "left_anti")
-                        .unionByName(better)
-                    )
-                    boundary = better
-                dist = self._scratch.ck(dist)
-
-        if ins is not None:
-            # Decrease-only relaxation seeded by improving inserted edges.
-            du = dist.withColumnRenamed("node", "src").withColumnRenamed(
-                "dist", "__du"
-            )
-            seeds, n_seeds = self._scratch.ckn(
-                ins.join(du, ["src"])
-                .select(
-                    F.col("dst").alias("node"), (F.col("__du") + 1).alias("__nd")
-                )
-                .groupBy("node")
-                .agg(F.min("__nd").alias("__nd"))
-                .join(dist, ["node"], "left")
-                .filter(F.col("dist").isNull() | (F.col("__nd") < F.col("dist")))
-                .select("node", F.col("__nd").alias("dist"))
-            )
-            if n_seeds:
-                # The seed rewrite stays a lazy anti-join over the seed
-                # checkpoint — _relax_down materializes the final map once.
-                dist = self._relax_down(
-                    seeds,
-                    n_seeds,
-                    dist.join(seeds.select("node"), ["node"], "left_anti")
-                    .unionByName(seeds),
-                    edges_new,
-                )
-
-        self.dist = dist
-        # Output deltas: full-outer diff of the old and new maps — Spark
-        # evaluates it over the two checkpointed maps, and only changed rows
-        # survive the filters.
-        o = old_dist.withColumnRenamed("dist", "__old")
-        n = dist.withColumnRenamed("dist", "__new")
-        j = o.join(n, ["node"], "full_outer")
-        changed = j.filter(
-            ~F.col("__old").eqNullSafe(F.col("__new"))
-        )
-        out = (
-            changed.filter(F.col("__old").isNotNull())
-            .select(
-                "node",
-                F.col("__old").alias("dist"),
-                F.lit(-1).cast("long").alias(DIFF),
-            )
-            .unionByName(
-                changed.filter(F.col("__new").isNotNull()).select(
-                    "node",
-                    F.col("__new").alias("dist"),
-                    F.lit(1).cast("long").alias(DIFF),
-                )
-            )
-        )
-        return out
+        upd = _edge_updates(insert, delete)
+        return self._fx.process_batch({} if upd is None else {"edge": upd})
 
     def distances(self) -> DataFrame:
-        return self.dist
+        """Current distance map (node, dist)."""
+        return self._fx.facts()
 
     def release(self) -> None:
-        self.edges.release()
-        self._scratch.reap()  # the distance map is scratch-held too
+        self._fx.release()
 
 
 class CountMaintainer:
@@ -1020,28 +780,17 @@ class KCoreMaintainer:
     ) -> DataFrame:
         self._scratch.reap(keep=(self.core,))
         old_core = self.core
-        # ONE tagged-delta checkpoint covers both sides; the symmetrized
-        # trace part and the per-side endpoint sets are lazy views over it
-        # (narrow maps over cached blocks — no further jobs).
-        tagged = []
-        if insert is not None:
-            tagged.append(
-                insert.select("src", "dst")
-                .distinct()
-                .withColumn(DIFF, F.lit(1).cast("long"))
+        # ONE delta checkpoint covers both sides, summed per edge (the trace
+        # is a multiset: an edge inserted twice needs two retractions); the
+        # symmetrized trace part and the per-side endpoint sets are lazy
+        # views over it (narrow maps over cached blocks — no further jobs).
+        delta = _edge_updates(insert, delete)
+        if delta is not None:
+            delta = tracked_local_checkpoint(
+                delta.groupBy("src", "dst")
+                .agg(F.sum(DIFF).cast("long").alias(DIFF))
+                .filter(F.col(DIFF) != 0)
             )
-        if delete is not None:
-            tagged.append(
-                delete.select("src", "dst")
-                .distinct()
-                .withColumn(DIFF, F.lit(-1).cast("long"))
-            )
-        delta = None
-        if tagged:
-            delta = tagged[0]
-            for t in tagged[1:]:
-                delta = delta.unionByName(t)
-            delta = tracked_local_checkpoint(delta)
         ins = (
             delta.filter(F.col(DIFF) > 0).select("src", "dst")
             if insert is not None

@@ -4,6 +4,8 @@ count, schema (column names), and order-insensitive values (columns sorted by
 name, rows sorted, floats rounded).
 
 Usage: python scripts/check_oracles.py [sf_dir] [query ...]
+
+Exits non-zero when a query fails or a named query is not registered.
 """
 
 from __future__ import annotations
@@ -42,6 +44,10 @@ def canon(df: pd.DataFrame) -> pd.DataFrame:
 def main() -> int:
     sf_dir = sys.argv[1] if len(sys.argv) > 1 else "/root/testdata/sf0.01"
     only = set(sys.argv[2:])
+    unknown = sorted(only - set(QUERIES))
+    if unknown:
+        print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
+        return 2
     spark = get_spark(app_name="check-oracles", cores=8, shuffle_partitions=8)
     con = duckdb.connect()
     for t in TABLES:

@@ -9,6 +9,7 @@ from __future__ import annotations
 
 import random
 
+import pytest
 from pyspark.sql import functions as F
 
 from differential_dataflow_spark.streaming.fixpoint import MaintainedFixpoint
@@ -169,6 +170,10 @@ def test_maintained_fixpoint_bucketed_state(spark, tmp_path):
     )
     reach = {0, 1, 2, 3}
     assert {r.node for r in mf.facts().collect()} == reach
+    # An update for an input the program does not have names it.
+    typo = spark.createDataFrame([(0, 9, 1)], "src long, dst long, diff long")
+    with pytest.raises(ValueError, match="'edge'"):
+        mf.process_batch({"edge": typo})
     batches = [
         # Cut 1->2, bridge 0->4: reach flips to {0,1,4,5}.
         ([(1, 2, -1), (0, 4, 1)], {(2, -1), (3, -1), (4, 1), (5, 1)}),
@@ -194,8 +199,8 @@ def test_maintained_fixpoint_bucketed_state(spark, tmp_path):
 
 
 def test_maintained_tc_nonlinear_squaring(spark):
-    """NON-LINEAR program (uses_derived=True): transitive closure by
-    squaring — path(x,y) :- edge(x,y) | path(x,z), path(z,y). The recursive
+    """NON-LINEAR program (the step reads ``$derived``): transitive closure
+    by squaring — path(x,y) :- edge(x,y) | path(x,z), path(z,y). The recursive
     relation appears in BOTH premise positions, so the step is the pair of
     delta rules (frontier ⋈ $derived) ∪ ($derived ⋈ frontier). Maintained
     under mixed insertions/deletions with exact update streams."""
@@ -228,7 +233,6 @@ def test_maintained_tc_nonlinear_squaring(spark):
             "edges": spark.createDataFrame(sorted(edges), "src long, dst long")
         },
         input_keys={"edges": ["src"]},
-        uses_derived=True,
         compact_every=2,
     )
     assert {(r.src, r.dst) for r in mf.facts().collect()} == _tc_oracle(edges)

@@ -518,3 +518,42 @@ def test_maintainers_release_scratch(spark):
         assert max(seen[8:]) <= max(seen[:4]), (make.__name__, seen)
         m.release()
         assert persisted() <= before, make.__name__
+
+
+@pytest.mark.parametrize("maintainer", ["bfs", "kcore"])
+def test_maintainers_count_edges_inserted_twice_in_one_batch(spark, maintainer):
+    # Edges are a multiset on every path: an edge inserted twice in ONE
+    # batch survives its first retraction, as a seed edge listed twice does.
+    from differential_dataflow_spark.streaming.maintain import (
+        IncrementalBFS,
+        KCoreMaintainer,
+    )
+
+    def edges(rows):
+        return spark.createDataFrame(rows, "src long, dst long")
+
+    if maintainer == "bfs":
+        # Chain 0->1->2; the shortcut (0,2) puts node 2 at dist 1.
+        m = IncrementalBFS(spark, edges([(0, 1), (1, 2)]), root=0)
+        extra = (0, 2)
+        with_extra, without = {(0, 0), (1, 1), (2, 1)}, {(0, 0), (1, 1), (2, 2)}
+
+        def state():
+            return {(r.node, r.dist) for r in m.distances().collect()}
+
+    else:
+        # Triangle 0-1-2 plus (2,3); (3,0) gives node 3 its second neighbor.
+        m = KCoreMaintainer(spark, edges([(0, 1), (1, 2), (2, 0), (2, 3)]), k=2)
+        extra = (3, 0)
+        with_extra, without = {0, 1, 2, 3}, {0, 1, 2}
+
+        def state():
+            return {r.node for r in m.core_nodes().collect()}
+
+    m.process_batch(edges([extra, extra]), None)
+    assert state() == with_extra
+    m.process_batch(None, edges([extra]))
+    assert state() == with_extra
+    m.process_batch(None, edges([extra]))
+    assert state() == without
+    m.release()
