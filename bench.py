@@ -264,8 +264,7 @@ def run_inner_incremental(cores: int) -> None:
         res["join"][f"batch_{batch_size}"] = drive(
             lambda d: dj.process_batch(d, None).count(), mk_join_delta, batch_size, rounds
         )
-        for tv in (dj._view or {}).values():
-            tv.release()
+        dj.release()
         release_all_cached(spark)
 
     print("INNER_INCR_JSON:" + json.dumps(res))

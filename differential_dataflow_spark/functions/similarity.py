@@ -246,7 +246,7 @@ def ivf_topk(
     exactly. The second scale path next to hyperplane LSH: at 100 TB the
     corpus is PARTITIONED BY cell (Iceberg partition = cell id), so a query
     reads nprobe/n_centroids of the data — the same pruned-state shape as
-    the bucketed TraceView. Output like brute_force_topk."""
+    the durable, key-bucketed Arrangement. Output like brute_force_topk."""
     from pyspark.sql.functions import pandas_udf
 
     if centroids is None:

@@ -140,13 +140,6 @@ class micro_batch_scope:
         conf.set("spark.sql.shuffle.partitions", str(self.parts))
         return self
 
-    def retune(self, n_rows: int | None) -> None:
-        """Re-derive the shuffle-partition count mid-scope (per round)."""
-        p = micro_shuffle_partitions(n_rows)
-        if p != self.parts:
-            self.parts = p
-            self.spark.conf.set("spark.sql.shuffle.partitions", str(p))
-
     def __exit__(self, *exc):
         if self._outermost:
             self.spark.conf.set("spark.sql.shuffle.partitions", self._saved)

@@ -14,7 +14,6 @@ from differential_dataflow_spark.streaming.maintain import (
     IncrementalBFS,
     IncrementalReachability,
     KCoreMaintainer,
-    TraceView,
 )
 from differential_dataflow_spark.streaming.delta_query import (
     DeltaQuery,
@@ -35,7 +34,6 @@ __all__ = [
     "IncrementalReachability",
     "KCoreMaintainer",
     "MaintainedFixpoint",
-    "TraceView",
     "half_join",
     "stream_stream_join",
 ]

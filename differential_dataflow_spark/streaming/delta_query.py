@@ -14,7 +14,7 @@ the pipelines PARTITION the output change — summing them telescopes
 retractions alike, for any number of relations updated in the same epoch.
 
 Spark realization: one micro-batch epoch at a time against one shared
-``TraceView`` per RELATION (not per occurrence — Spark's column renaming
+``Arrangement`` per RELATION (not per occurrence — Spark's column renaming
 plays the role of the reference's per-occurrence forward/reverse
 arrangements), so "pre/post-batch time" is simply which view a term joins
 (``R_old`` vs ``R_old ∪ ΔR``). For triangles over a single edge relation
@@ -37,16 +37,17 @@ back to an explicit crossJoin.
 from __future__ import annotations
 
 from collections.abc import Mapping, Sequence
+from functools import reduce
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from differential_dataflow_spark.collection import DIFF
+from differential_dataflow_spark.operators.arrange import Arrangement
 from differential_dataflow_spark.session import (
     micro_batch_scope,
     tracked_local_checkpoint,
 )
-from differential_dataflow_spark.streaming.maintain import TraceView
 
 
 def half_join(
@@ -91,8 +92,13 @@ class DeltaQuery:
     ``diff``; accumulating the outputs reproduces the batch join of the
     final relation contents (pytest: 3-path over two relations, 4-clique,
     triangle parity with the hand-wired pipelines). The returned frame is
-    valid until the next call (which may compact the traces) — the TraceView
+    valid until the next call (which may compact the traces) — the trace
     cursor contract.
+
+    ``state_dir`` keeps each relation's trace durable under
+    ``state_dir/<relation>`` (bucketed by the relation's first column), and
+    a new query on a populated ``state_dir`` resumes from it, its
+    :attr:`epoch` past every sealed batch. Default: in memory.
     """
 
     def __init__(
@@ -101,6 +107,7 @@ class DeltaQuery:
         relations: Mapping[str, Sequence[str]],
         atoms: Sequence[tuple[str, Sequence[str]]],
         compact_every: int = 8,
+        state_dir: str | None = None,
     ):
         self.spark = spark
         self.relations = {r: list(cols) for r, cols in relations.items()}
@@ -120,16 +127,28 @@ class DeltaQuery:
                 if v not in self.variables:
                     self.variables.append(v)
         self.traces = {
-            r: TraceView(spark, compact_every=compact_every)
-            for r in self.relations
+            r: Arrangement(
+                spark,
+                f"{state_dir}/{r}" if state_dir else None,
+                key=cols[:1],
+                compact_every=compact_every,
+            )
+            for r, cols in self.relations.items()
         }
+        # Batches processed: each seals its deltas at this ordinal.
+        self.epoch = max(t.upper for t in self.traces.values())
 
     # -- helpers ------------------------------------------------------- #
 
     def _as_atom(self, df: DataFrame, rel: str, vs: list[str]) -> DataFrame:
         """Rename a relation-shaped frame to an atom's variables; repeated
-        variables within the atom become equality filters."""
+        variables within the atom become equality filters. Trace and delta
+        frames hold exactly ``(cols..., diff)``, so an atom whose variables
+        are its relation's columns is the frame itself (every DataFrame
+        call is a driver round trip on the micro-batch path)."""
         cols = self.relations[rel]
+        if vs == cols:
+            return df
         sel, seen, conds = [], {}, []
         for i, (c, v) in enumerate(zip(cols, vs)):
             if v in seen:
@@ -161,6 +180,23 @@ class DeltaQuery:
             remaining.remove(j)
         return order
 
+    def _empty(self, frames: Mapping[str, DataFrame | None]) -> DataFrame:
+        """The empty output, typed from the relations' live frames (each
+        variable from the first relation column that binds it). Built in
+        the JVM: a frame from a Python list is a Python RDD, and every job
+        that reads it waits on Python workers."""
+
+        def dtype(v: str) -> str:
+            for rel, vs in self.atoms:
+                if v in vs and frames[rel] is not None:
+                    return dict(frames[rel].dtypes)[self.relations[rel][vs.index(v)]]
+            return "bigint"
+
+        return self.spark.range(0).select(
+            *[F.lit(None).cast(dtype(v)).alias(v) for v in self.variables],
+            F.lit(0).cast("long").alias(DIFF),
+        )
+
     # -- the maintenance step ------------------------------------------ #
 
     def process_batch(
@@ -177,17 +213,17 @@ class DeltaQuery:
                 raise ValueError(f"delta for unknown relation {r!r}")
         for tv in self.traces.values():
             tv.maybe_compact()
-        d: dict[str, DataFrame | None] = {}
-        for r, cols in self.relations.items():
-            if r in deltas and deltas[r] is not None:
-                d[r] = tracked_local_checkpoint(
-                    deltas[r]
-                    .groupBy(*cols)
-                    .agg(F.sum(DIFF).alias(DIFF))
-                    .filter(F.col(DIFF) != 0)
-                )
-            else:
-                d[r] = None
+        # Raw deltas, not consolidated: the half-joins multiply weights, so
+        # duplicates and cancelling rows sum out in the output consolidation
+        # and in the trace's compaction — one shuffle less per relation.
+        # Lazy checkpoints: the output job that reads a delta materializes
+        # it — one job less per relation (checked before sealing, below).
+        d: dict[str, DataFrame | None] = {
+            r: tracked_local_checkpoint(deltas[r].select(*cols, DIFF), eager=False)
+            if deltas.get(r) is not None
+            else None
+            for r, cols in self.relations.items()
+        }
         old = {r: tv.view() for r, tv in self.traces.items()}
         new: dict[str, DataFrame | None] = {}
         for r in self.relations:
@@ -198,36 +234,21 @@ class DeltaQuery:
             else:
                 new[r] = old[r].unionByName(d[r])
 
-        # Empty-pipeline placeholder typed from the live frames (each var's
-        # dtype comes from the first relation column that binds it).
-        def var_dtype(v: str) -> str:
-            for rel, vs in self.atoms:
-                if v in vs:
-                    col = self.relations[rel][vs.index(v)]
-                    src = d[rel] if d[rel] is not None else old[rel]
-                    if src is not None:
-                        return dict(src.dtypes)[col]
-            return "bigint"
-
-        schema = ", ".join(
-            [f"{v} {var_dtype(v)}" for v in self.variables] + [f"{DIFF} long"]
-        )
-        empty = self.spark.createDataFrame([], schema)
-
-        def pipeline(pos: int) -> DataFrame:
+        def pipeline(pos: int) -> DataFrame | None:
+            """Position ``pos``'s delta pipeline; None when it is empty."""
             rel_i, vars_i = self.atoms[pos]
             if d[rel_i] is None:
-                return empty
+                return None
             bindings = self._as_atom(d[rel_i], rel_i, vars_i)
             bound = set(vars_i)
             for step, j in enumerate(self._chain_order(pos)):
                 rel_j, vars_j = self.atoms[j]
                 view = new[rel_j] if j < pos else old[rel_j]
                 if view is None:
-                    return empty
+                    return None
                 ext = self._as_atom(view, rel_j, vars_j)
                 on = sorted(bound & set(dict.fromkeys(vars_j)))
-                # Step 0 pins the consolidated Δ as the broadcast side; later
+                # Step 0 pins the (small) Δ as the broadcast side; later
                 # steps are left to AQE, which sees the REAL sizes of the
                 # bindings chain vs the trace at runtime and broadcasts the
                 # smaller (measured: forcing the bindings side everywhere
@@ -238,21 +259,26 @@ class DeltaQuery:
                 bound |= set(vars_j)
             return bindings.select(*self.variables, DIFF)
 
-        out = empty
-        for pos in range(len(self.atoms)):
-            out = out.unionByName(pipeline(pos))
-        # Consolidate the epoch's output (one small shuffle over O(|Δ|·deg)
-        # rows) and materialize before the traces mutate (compaction frees
-        # the blocks the lazy plan references) — the DeltaJoin discipline.
-        out = (
-            out.groupBy(*self.variables)
-            .agg(F.sum(DIFF).alias(DIFF))
-            .filter(F.col(DIFF) != 0)
-        )
-        out = tracked_local_checkpoint(out)
+        pipes = [p for p in map(pipeline, range(len(self.atoms))) if p is not None]
+        if pipes:
+            # Consolidate the epoch's output (one small shuffle over
+            # O(|Δ|·deg) rows) and materialize it before the traces mutate
+            # (compaction frees the blocks the lazy plan references).
+            out = tracked_local_checkpoint(
+                reduce(DataFrame.unionByName, pipes)
+                .groupBy(*self.variables)
+                .agg(F.sum(DIFF).alias(DIFF))
+                .filter(F.col(DIFF) != 0)
+            )
+        else:
+            out = self._empty({r: d[r] if d[r] is not None else old[r] for r in d})
         for r, delta in d.items():
-            if delta is not None:
-                self.traces[r].append(delta)
+            if delta is None:
+                continue
+            if not all(rdd.isCheckpointed() for rdd in delta._ckpt_rdds):
+                delta.count()  # no output job read it: materialize it now
+            self.traces[r].append(delta, at=self.epoch)
+        self.epoch += 1
         return out
 
     def release(self) -> None:

@@ -65,15 +65,16 @@ updates ``(payload..., diff)``:
 Every change is sealed into the derived trace as a tagged ``(facts...,
 diff)`` part, and a batch returns the consolidation of the parts it sealed.
 
-Scale shape: inputs and the derived set live in :class:`TraceView` spines
-(optionally bucketed parquet, so per-batch reads prune to touched
-partitions); suspect/frontier sets are small and broadcast into the joins;
-every loop round is ONE counted-checkpoint job (materialization fused with
-the convergence probe). The one inherently program-shaped cost is the
-rederive boundary seed (``step`` over the kept region): the default scans
-it once per deletion batch; programs with a cheaper reverse-key form (like
-IncrementalReachability's dst-keyed boundary: only edges INTO the suspect
-set) pass ``rederive_seeds`` to override it.
+Scale shape: inputs and the derived set live in arrangements
+(operators/arrange.py; inputs optionally durable and key-bucketed, so
+per-batch reads prune to touched buckets); suspect/frontier sets are small
+and broadcast into the joins; every loop round is ONE counted-checkpoint
+job (materialization fused with the convergence probe). The one inherently
+program-shaped cost is the rederive boundary seed (``step`` over the kept
+region): the default scans it once per deletion batch; programs with a
+cheaper reverse-key form (like IncrementalReachability's dst-keyed
+boundary: only edges INTO the suspect set) pass ``rederive_seeds`` to
+override it.
 """
 
 from __future__ import annotations
@@ -85,12 +86,12 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from differential_dataflow_spark.collection import DIFF
+from differential_dataflow_spark.operators.arrange import Arrangement
 from differential_dataflow_spark.session import (
     Scratch,
     micro_batch_scope,
     tracked_local_checkpoint,
 )
-from differential_dataflow_spark.streaming.maintain import TraceView
 
 Inputs = Mapping[str, DataFrame]
 Step = Callable[[DataFrame, Inputs], DataFrame]
@@ -189,24 +190,25 @@ class MaintainedFixpoint:
         self.max_iters = max_iters
         self._scratch = Scratch()
 
-        self.inputs: dict[str, TraceView] = {}
+        self.inputs: dict[str, Arrangement] = {}
         self._input_neg: dict[str, bool] = {}
         input_keys = input_keys or {}
         for name, df in inputs.items():
-            key = list(input_keys.get(name, df.columns))
-            tv = TraceView(
+            tv = Arrangement(
                 spark,
+                f"{state_dir}/{name}" if state_dir else None,
+                key=input_keys.get(name, df.columns),
                 compact_every=compact_every,
-                bucket_path=(f"{state_dir}/{name}" if state_dir else None),
                 n_buckets=n_buckets,
             )
             # One row per copy: a row present twice has multiplicity 2.
-            tv.seed(df.withColumn(DIFF, F.lit(1).cast("long")), key=key)
+            tv.seed(df.withColumn(DIFF, F.lit(1).cast("long")))
             self.inputs[name] = tv
             self._input_neg[name] = False
 
-        self.derived = TraceView(spark, compact_every=compact_every)
-        self.derived.key = self.fact_cols
+        self.derived = Arrangement(
+            spark, key=self.fact_cols, compact_every=compact_every
+        )
         self._derived_neg = False
         self._sealed: list[DataFrame] = []  # parts sealed by this batch
 
@@ -224,10 +226,7 @@ class MaintainedFixpoint:
             (tv.base_rows or 0 for tv in self.inputs.values()), default=None
         )
         with micro_batch_scope(spark, n_state):
-            self.derived.seed(
-                base_axioms.withColumn(DIFF, F.lit(1).cast("long")),
-                key=self.fact_cols,
-            )
+            self.derived.seed(base_axioms.withColumn(DIFF, F.lit(1).cast("long")))
             # The seeded base is the first frontier: no second copy of it.
             self._expand(
                 self.derived.base.select(*self.fact_cols),
@@ -473,7 +472,7 @@ class MaintainedFixpoint:
     def _process_batch(self, updates: Mapping[str, DataFrame]) -> DataFrame:
         self._scratch.reap()
         self._sealed = []
-        # Compact BEFORE capturing support views: TraceView views are valid
+        # Compact BEFORE capturing support views: trace views are valid
         # only until the next append/compact, and the old-support snapshots
         # below must survive the whole batch. A compaction folds the ±1
         # pairs to net-positive rows, so the negative-support flags reset —

@@ -11,32 +11,25 @@ one side is matched against the other side's trace, diffs multiply):
    a projection; watermarks bound state like trace compaction
    (src/trace/mod.rs:79-114 logical compaction ≈ state eviction).
 
-2. ``DeltaJoin`` — the arrangement-based micro-batch join for ``foreachBatch``
-   pipelines: each side's consolidated history IS an
-   ``operators.arrange.Arrangement`` — the same key-partitioned parquet
-   trace (sealed batch Descriptions, manifest, ``since`` frontier) that
-   serves point lookups — mirroring the reference's SINGLE trace abstraction
-   shared by join state and queries (src/trace/mod.rs:1-8). Per batch the
-   three delta terms are computed against the pre-batch traces, the deltas
-   are sealed as new batches (epoch = micro-batch ordinal), and the traces
-   are periodically compacted (the spine's merge,
-   src/trace/implementations/spine_fueled.rs, delegated to the
-   Arrangement's consolidating rewrite). This is the path that scales to
-   unbounded state with explicit storage control (Iceberg/Delta table in
-   production).
+2. ``DeltaJoin`` — the micro-batch join for ``foreachBatch`` pipelines: a
+   two-relation ``DeltaQuery`` (streaming/delta_query.py), so each side's
+   history is an ``operators.arrange.Arrangement`` — the engine's single
+   trace type, shared by join state, counts and point queries
+   (src/trace/mod.rs:1-8). In memory by default; with ``state_dir`` the
+   traces are durable and a new ``DeltaJoin`` on a populated directory
+   resumes the stream.
 """
 
 from __future__ import annotations
 
 from collections.abc import Sequence
-from pathlib import Path
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
-from differential_dataflow_spark.collection import DIFF, EPOCH, DiffCollection
-from differential_dataflow_spark.operators.arrange import Arrangement
-from differential_dataflow_spark.session import tracked_local_checkpoint
+from differential_dataflow_spark.collection import DIFF
+from differential_dataflow_spark.streaming.delta_query import DeltaQuery
 
 
 def stream_stream_join(
@@ -57,17 +50,18 @@ def stream_stream_join(
 
 
 class DeltaJoin:
-    """Arrangement-backed incremental equi-join for micro-batch pipelines.
+    """Incremental equi-join for micro-batch pipelines: the delta rule
+    ΔL ⋈ R  ∪  L ⋈ ΔR  ∪  ΔL ⋈ ΔR of a two-relation :class:`DeltaQuery`.
 
-    State layout: two ``Arrangement`` traces (left/, right/) — key-partitioned
-    parquet with per-batch Descriptions and a compaction frontier. Deltas are
-    sealed with epoch = micro-batch ordinal; the join view reads the trace's
-    update rows and drops the epoch (the join needs only the accumulated
-    weights — the reference's cursor over merged batches). ``process_batch``
-    implements the delta rule; compaction advances the trace's ``since`` to
-    the current batch when the sealed-batch count reaches ``compact_every``,
-    collapsing history exactly like the spine's merges.
+    Each side is one relation ``(on..., __left|__right)``: the keys plus a
+    struct of the side's other columns (a constant when there are none), so
+    the relations are fixed at construction — a side can be sealed before
+    the other side's first frame, and a resumed ``state_dir`` needs no
+    column discovery. Outputs are ``(on..., left cols..., right cols...,
+    diff)``.
     """
+
+    SIDES = ("left", "right")
 
     def __init__(
         self,
@@ -76,118 +70,61 @@ class DeltaJoin:
         on: Sequence[str],
         compact_every: int = 8,
     ):
-        """``state_dir=None`` selects the IN-MEMORY spine: each side's trace
-        is a ``streaming.maintain.TraceView`` (persisted base + sealed delta
-        parts) instead of a parquet Arrangement, so a round re-reads no
-        files — the hot-tier shape for latency-sensitive micro-batch loops;
-        the parquet mode remains the durable/resumable tier."""
-        from differential_dataflow_spark.streaming.maintain import TraceView
-
-        self.spark = spark
+        """``state_dir=None`` keeps both traces in memory (a round re-reads
+        no files); a directory makes them durable and resumable."""
         self.on = list(on)
-        self.root = Path(state_dir) if state_dir is not None else None
-        self.compact_every = compact_every
-        self._arr: dict[str, Arrangement | None] = {"left": None, "right": None}
-        self._view: dict[str, TraceView] | None = None
-        if self.root is None:
-            self._view = {
-                "left": TraceView(spark, compact_every=compact_every),
-                "right": TraceView(spark, compact_every=compact_every),
-            }
-        self._batch = 0
-        if self.root is not None:
-            # RESUME: re-attach existing traces (trace import,
-            # agent.rs:215-288) instead of resetting their manifests, and
-            # restart the epoch counter past every sealed batch — a new
-            # DeltaJoin on a populated state_dir continues the stream
-            # exactly where the previous incarnation stopped.
-            for side in ("left", "right"):
-                if (self.root / side / "manifest.json").exists():
-                    self._arr[side] = Arrangement.load(
-                        spark, str(self.root / side)
-                    )
-            uppers = [
-                b["upper"]
-                for arr in self._arr.values()
-                if arr is not None
-                for b in arr.batches
-            ]
-            self._batch = max(uppers, default=0)
-
-    def _trace(self, side: str) -> DataFrame | None:
-        """The side's history as ``(key..., payload..., diff)`` rows (epochs
-        dropped — per-epoch granularity is the trace's business, the join
-        only multiplies accumulated weights), or None if nothing sealed."""
-        if self._view is not None:
-            return self._view[side].view()
-        arr = self._arr[side]
-        if arr is None:
-            return None
-        df = arr._read()
-        if df is None:
-            return None
-        return df.drop(EPOCH)
-
-    def _append(self, side: str, delta: DataFrame) -> None:
-        if self._view is not None:
-            from differential_dataflow_spark.session import (
-                tracked_local_checkpoint,
-            )
-
-            tv = self._view[side]
-            tv.maybe_compact()
-            tv.append(tracked_local_checkpoint(delta))
-            return
-        if self._arr[side] is None:
-            self._arr[side] = Arrangement(
-                self.spark, str(self.root / side), key=self.on
-            )
-        arr = self._arr[side]
-        arr.insert_batch(
-            DiffCollection(delta.withColumn(EPOCH, F.lit(self._batch).cast("long")))
+        rels = {s: (*self.on, f"__{s}") for s in self.SIDES}
+        self._dq = DeltaQuery(
+            spark,
+            relations=rels,
+            atoms=list(rels.items()),
+            compact_every=compact_every,
+            state_dir=state_dir,
         )
-        if len(arr.batches) >= self.compact_every:
-            arr.compact(since=self._batch)
+
+    @property
+    def epoch(self) -> int:
+        """Batches processed, counting those of a resumed ``state_dir``."""
+        return self._dq.epoch
+
+    def _rows(self, side: str, df: DataFrame) -> DataFrame:
+        payload = [c for c in df.columns if c not in self.on and c != DIFF]
+        packed = F.struct(*payload) if payload else F.lit(True)
+        return df.select(*self.on, packed.alias(f"__{side}"), DIFF)
 
     def seed(self, side: str, df: DataFrame) -> None:
         """Pre-load one side's trace with existing state ``(key..., payload...,
         diff)`` — the bulk-load that precedes incremental maintenance
         (one-time O(state); key-partitioned so later lookups co-locate)."""
-        if self._view is not None:
-            self._view[side].seed(df, key=self.on)
-            return
-        self._append(side, df)
+        self._dq.traces[side].seed(self._rows(side, df))
 
     def process_batch(
         self, delta_left: DataFrame | None, delta_right: DataFrame | None
     ) -> DataFrame | None:
         """Apply one epoch of deltas; returns the join's output delta:
-        ΔL ⋈ R  ∪  L ⋈ ΔR  ∪  ΔL ⋈ ΔR, diffs multiplied. L/R are the traces
-        *before* this batch (matching join_core's batch-vs-trace discipline,
-        src/operators/join.rs:413-465)."""
-        assert delta_left is not None or delta_right is not None
-        l_trace = self._trace("left")
-        r_trace = self._trace("right")
-        outs: list[DataFrame] = []
-        if delta_left is not None and r_trace is not None:
-            outs.append(stream_stream_join(delta_left, r_trace, self.on))
-        if delta_right is not None and l_trace is not None:
-            outs.append(stream_stream_join(l_trace, delta_right, self.on))
-        if delta_left is not None and delta_right is not None:
-            outs.append(stream_stream_join(delta_left, delta_right, self.on))
-        out = None
-        if outs:
-            out = outs[0]
-            for o in outs[1:]:
-                out = out.unionByName(o)
-            # Materialize BEFORE mutating the traces: the lazy plan references
-            # the pre-batch trace files, which append/compaction will rewrite.
-            # Tracked so long-running foreachBatch loops can release_checkpoint
-            # each round's output instead of leaking one block set per batch.
-            out = tracked_local_checkpoint(out)
-        if delta_left is not None:
-            self._append("left", delta_left)
-        if delta_right is not None:
-            self._append("right", delta_right)
-        self._batch += 1
-        return out
+        ΔL ⋈ R  ∪  L ⋈ ΔR  ∪  ΔL ⋈ ΔR, diffs multiplied, consolidated — or
+        None when nothing can join yet. L/R are the traces *before* this
+        batch (join_core's batch-vs-trace discipline,
+        src/operators/join.rs:413-465). The output is a tracked checkpoint,
+        so long-running loops can ``release_checkpoint`` it."""
+        if delta_left is None and delta_right is None:
+            raise ValueError("process_batch needs a delta for at least one side")
+        deltas = {
+            s: self._rows(s, d)
+            for s, d in zip(self.SIDES, (delta_left, delta_right))
+            if d is not None
+        }
+        joinable = all(s in deltas or self._dq.traces[s].batches for s in self.SIDES)
+        out = self._dq.process_batch(deltas)
+        if not joinable:
+            return None
+        cols = [F.col(c) for c in self.on]
+        for s in self.SIDES:
+            if isinstance(out.schema[f"__{s}"].dataType, StructType):
+                cols.append(F.col(f"__{s}.*"))
+        res = out.select(*cols, DIFF)
+        res._ckpt_rdds = list(getattr(out, "_ckpt_rdds", ()))
+        return res
+
+    def release(self) -> None:
+        self._dq.release()

@@ -1,36 +1,28 @@
-"""O(delta)-per-round maintenance of large arranged state (in-memory spine).
+"""O(delta)-per-round maintenance of large arranged state.
 
 The reference's headline capability is CHEAP MAINTENANCE: after loading a
 large collection, each small batch of updates costs work proportional to the
 batch, not the state (README.md:150-214 — 228 µs/round at batch 1, ~5 µs per
-update at batch 100k). The parquet ``Arrangement`` (operators/arrange.py) is
-the durable tier of that story; this module is the hot tier — the same
-LSM/spine shape held in executor memory so a micro-batch round never rewrites
-or re-reads state from disk:
+update at batch 100k). Every maintainer here keeps its state in the one trace
+type, :class:`~differential_dataflow_spark.operators.arrange.Arrangement`:
+in memory by default, so a micro-batch round never rewrites or re-reads state
+from disk, or durable and key-bucketed under ``state_dir``:
 
-- ``TraceView`` — a persisted consolidated base plus a list of sealed small
-  delta parts (each lineage-truncated). Reads are a lazy union; ``append`` is
-  O(delta); ``compact`` folds the parts into a new consolidated base (the
-  fueled spine merge, src/trace/implementations/spine_fueled.rs, run as one
-  hash aggregate) so amortized per-round merge cost is O(state/compact_every).
-- ``CountMaintainer`` — incremental ``count_total`` against a TraceView
+- ``CountMaintainer`` — incremental ``count_total`` against an arrangement
   (reference src/operators/count.rs:81-123): per batch, only the TOUCHED keys
   are looked up (broadcast semijoin of the delta's key set against the
-  key-partitioned state) and the operator emits the ``(key, old, -1),
-  (key, new, +1)`` retraction pairs.
+  key-bucketed state) and the operator emits the ``(key, old, -1),
+  (key, new, +1)`` retraction pairs. With ``state_dir`` it resumes after a
+  restart from every part it sealed.
 - ``IncrementalReachability`` and ``IncrementalBFS`` — graph programs run on
   the generic maintained fixpoint (streaming/fixpoint.py): reachability over
   distinct-valued ``node`` facts, BFS over min-valued ``(node, dist)`` facts,
   both with the dst-keyed rederive boundary.
 - ``KCoreMaintainer`` — the k-core under edge changes (a threshold, not a
-  monotone program): shrink/grow peel cascades over an edge TraceView.
+  monotone program): shrink/grow peel cascades over an edge arrangement.
 
-``DeltaJoin`` (streaming/join.py) keeps its in-memory mode
-(``state_dir=None``) in two TraceViews.
-
-At cluster scale the base would be a key-bucketed cached table (or the
-parquet Arrangement behind an executor-side cache); the delta parts and the
-broadcast-semijoin lookup shape are unchanged.
+``DeltaJoin`` (streaming/join.py) is a two-relation ``DeltaQuery`` over the
+same arrangements.
 """
 
 from __future__ import annotations
@@ -42,210 +34,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from differential_dataflow_spark.collection import DIFF
+from differential_dataflow_spark.operators.arrange import Arrangement
 from differential_dataflow_spark.session import (
     Scratch,
-    counted_local_checkpoint,
     micro_batch_scope,
-    release_checkpoint,
     tracked_local_checkpoint,
 )
-
-
-BUCKET = "__bucket"
-
-
-class TraceView:
-    """LSM view of an update multiset ``(payload..., diff)``.
-
-    Parts are lineage-truncated in-memory checkpoints; the base is either an
-    in-memory checkpoint (default) or — when ``bucket_path`` is given — a
-    parquet directory HASH-BUCKET-PARTITIONED by the key columns, the durable
-    shape that survives state larger than memory: a small-delta round
-    computes its touched buckets from the delta's key set and reads ONLY
-    those partitions (:meth:`lookup_view`), so per-round state I/O is
-    O(|Δ|/|keyspace| · state), not O(state). On a cluster the parquet dir is
-    an Iceberg/Delta table and the pruning is identical.
-
-    Contract: DataFrames returned by :meth:`view`/:meth:`lookup_view` are
-    valid until the next ``append``/``compact`` (compaction releases or
-    rewrites what they reference); consume or checkpoint them first, exactly
-    like the reference's cursor validity under spine merges
-    (src/trace/mod.rs:116-150).
-    """
-
-    def __init__(
-        self,
-        spark: SparkSession,
-        compact_every: int = 16,
-        bucket_path: str | None = None,
-        n_buckets: int = 64,
-    ):
-        self.spark = spark
-        self.compact_every = compact_every
-        self.bucket_path = bucket_path
-        self.n_buckets = n_buckets
-        self.key: list[str] | None = None
-        self.base: DataFrame | None = None
-        self.base_rows: int | None = None  # known row count of the seeded base
-        self.parts: list[DataFrame] = []
-        if bucket_path is not None:
-            self._recover()
-
-    def _recover(self) -> None:
-        """Startup recovery for the staged base swap: ``_write_base`` has a
-        window between ``rename(root -> old)`` and ``rename(tmp -> root)``
-        where no live base exists — a crash there must not lose the state.
-        On open: a missing root with a surviving ``.old`` restores it (the
-        pre-swap base is the last complete one); a leftover ``.tmp`` is
-        discarded (it may be a partial write)."""
-        import shutil
-        from pathlib import Path
-
-        root = Path(self.bucket_path)
-        old, tmp = root.with_suffix(".old"), root.with_suffix(".tmp")
-        if not root.exists() and old.exists():
-            old.rename(root)
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        if root.exists():
-            self.base = self.spark.read.parquet(str(root))
-
-    def _bucket_col(self):
-        if not self.key:
-            raise ValueError(
-                "bucketed TraceView requires key columns: call seed(df, "
-                "key=[...]) before the first append/compact, or have the "
-                "owning operator set .key at construction"
-            )
-        return F.pmod(F.xxhash64(*self.key), F.lit(self.n_buckets)).cast("int")
-
-    def _write_base(self, df: DataFrame) -> None:
-        """Write (or rewrite, via staged swap) the bucket-partitioned base.
-        Crash-safe with :meth:`_recover`: the only window without a root dir
-        leaves ``.old`` intact, which recovery restores on next open."""
-        import shutil
-        from pathlib import Path
-
-        root = Path(self.bucket_path)
-        tmp, old = root.with_suffix(".tmp"), root.with_suffix(".old")
-        shutil.rmtree(tmp, ignore_errors=True)
-        shutil.rmtree(old, ignore_errors=True)
-        (
-            df.withColumn(BUCKET, self._bucket_col())
-            .repartition(BUCKET)
-            .write.partitionBy(BUCKET)
-            .mode("overwrite")
-            .parquet(str(tmp))
-        )
-        if root.exists():
-            root.rename(old)
-        tmp.rename(root)
-        shutil.rmtree(old, ignore_errors=True)
-        self.base = self.spark.read.parquet(str(root))
-
-    def seed(self, df: DataFrame, key: Sequence[str] | None = None) -> None:
-        """Load the initial state (one-time O(state) cost). ``key`` hash-
-        partitions the base so later per-key work is co-located; required
-        for the bucketed (``bucket_path``) mode."""
-        self.key = list(key) if key else None
-        if self.bucket_path is not None:
-            assert self.key, "bucketed TraceView requires key columns"
-            self._write_base(df)
-            return
-        if key:
-            df = df.repartition(
-                self.spark.sparkContext.defaultParallelism, *key
-            )
-        # Counted checkpoint: same single job as the eager checkpoint, and
-        # the row count lets owners derive micro-round partition counts.
-        self.base, self.base_rows = counted_local_checkpoint(df)
-
-    def append(self, delta: DataFrame) -> None:
-        """Seal one small part. The caller passes a MATERIALIZED (checkpointed
-        or local-relation) DataFrame; appends never trigger jobs here."""
-        self.parts.append(delta)
-
-    def maybe_compact(self) -> bool:
-        """Compact when due; returns True iff a compaction ran (callers use
-        this to reset their negative-support flags — after the fold every
-        surviving row is net-positive again)."""
-        if len(self.parts) >= self.compact_every:
-            self.compact()
-            return True
-        return False
-
-    def compact(self) -> None:
-        """Fold base + parts into a new consolidated base — one hash
-        aggregate over the state, amortized to O(state/compact_every) per
-        append by the caller's ``maybe_compact`` cadence. Bucketed bases are
-        rewritten in place with a crash-safe staged swap."""
-        df = self.view()
-        if df is None:
-            return
-        payload = [c for c in df.columns if c != DIFF]
-        folded = (
-            df.groupBy(*payload).agg(F.sum(DIFF).alias(DIFF)).filter(F.col(DIFF) != 0)
-        )
-        if self.bucket_path is not None:
-            # Materialize before the swap unlinks the files the plan reads.
-            folded = tracked_local_checkpoint(folded)
-            for p in self.parts:
-                release_checkpoint(p)
-            self.parts = []
-            self._write_base(folded)
-            release_checkpoint(folded)
-            return
-        new_base = tracked_local_checkpoint(folded)
-        self.release()
-        self.base = new_base
-
-    def _base_df(self) -> DataFrame | None:
-        if self.base is None:
-            return None
-        if self.bucket_path is None:
-            return self.base
-        return self.base.drop(BUCKET)
-
-    def _union(self, dfs: list[DataFrame]) -> DataFrame | None:
-        if not dfs:
-            return None
-        out = dfs[0]
-        for d in dfs[1:]:
-            out = out.unionByName(d)
-        return out
-
-    def view(self) -> DataFrame | None:
-        base = self._base_df()
-        return self._union(([base] if base is not None else []) + self.parts)
-
-    def lookup_view(self, keys: DataFrame) -> DataFrame | None:
-        """The sub-multiset that can contain the given keys: bucketed bases
-        prune to the touched partitions; parts are small and always included.
-        The bucket set is applied as a BROADCAST semi-join on the partition
-        column (dynamic partition pruning reaches the parquet scan), not a
-        collect-then-isin — saving one driver action per lookup in the
-        latency-floor batch-1 path."""
-        if self.base is None or self.bucket_path is None:
-            return self.view()
-        key_buckets = (
-            keys.select(
-                F.pmod(F.xxhash64(*self.key), F.lit(self.n_buckets))
-                .cast("int")
-                .alias(BUCKET)
-            )
-            .distinct()
-        )
-        base = (
-            self.base.join(F.broadcast(key_buckets), [BUCKET], "left_semi")
-            .drop(BUCKET)
-        )
-        return self._union([base] + self.parts)
-
-    def release(self) -> None:
-        for df in ([self.base] if self.base is not None else []) + self.parts:
-            release_checkpoint(df)
-        self.base = None
-        self.parts = []
+from differential_dataflow_spark.streaming.fixpoint import MaintainedFixpoint
 
 
 def _out_edges(tails: DataFrame, edges: DataFrame) -> DataFrame:
@@ -343,11 +138,6 @@ class IncrementalReachability:
     ):
         """``edges``: (src, dst); ``roots``: (node). Runs the initial
         fixpoint (one-time O(graph) cost, like any bulk load)."""
-        # Deferred: fixpoint.py builds on this module's TraceView.
-        from differential_dataflow_spark.streaming.fixpoint import (
-            MaintainedFixpoint,
-        )
-
         self._fx = MaintainedFixpoint(
             spark,
             fact_cols=["node"],
@@ -428,10 +218,6 @@ class IncrementalBFS:
     ):
         """``edges``: (src, dst). Runs the initial BFS (one-time O(graph)
         cost, like any bulk load)."""
-        from differential_dataflow_spark.streaming.fixpoint import (
-            MaintainedFixpoint,
-        )
-
         # Built in the JVM: a frame from a Python list is a Python RDD, and
         # every round that reads the axioms would wait on Python workers.
         origin = spark.range(1).select(
@@ -470,7 +256,7 @@ class IncrementalBFS:
 
 
 class CountMaintainer:
-    """Incremental per-key count over a TraceView: the ``count_total``
+    """Incremental per-key count over an arrangement: the ``count_total``
     maintenance loop (src/operators/count.rs:81-123 — walk the sealed batch
     against the trace, emit -old/+new per changed key).
 
@@ -490,28 +276,25 @@ class CountMaintainer:
         state_dir: str | None = None,
         n_buckets: int = 64,
     ):
-        """``state_dir`` selects the bucket-partitioned parquet base: per
-        round only the delta's touched buckets are read — the state-bigger-
-        than-memory shape (see TraceView). Default is the in-memory spine."""
+        """``state_dir`` selects the durable arrangement: per round only the
+        delta's touched buckets are read — the state-bigger-than-memory
+        shape — and a new maintainer on a populated ``state_dir`` resumes
+        from it (no ``seed_counts``). Default is the in-memory tier."""
         self.spark = spark
         self.keys = list(keys)
         self.alias = alias
-        self.trace = TraceView(
+        self.trace = Arrangement(
             spark,
+            state_dir,
+            key=self.keys,
             compact_every=compact_every,
-            bucket_path=state_dir,
             n_buckets=n_buckets,
         )
-        # The maintainer's keys ARE the trace key: set up front so a bucketed
-        # trace used without seed_counts (pure append-from-empty) can still
-        # compute its bucket column at first compaction.
-        self.trace.key = self.keys
 
     def seed_counts(self, counts: DataFrame, count_col: str = "count") -> None:
         """Pre-load existing per-key counts (``(keys..., count_col)``)."""
         self.trace.seed(
-            counts.select(*self.keys, F.col(count_col).cast("long").alias(DIFF)),
-            key=self.keys,
+            counts.select(*self.keys, F.col(count_col).cast("long").alias(DIFF))
         )
 
     def process_batch(self, delta: DataFrame) -> DataFrame:
@@ -575,7 +358,8 @@ class CountMaintainer:
         """Current consolidated state ``(keys..., {alias})`` — for tests and
         snapshot reads."""
         tv = self.trace.view()
-        assert tv is not None, "no state seeded or appended"
+        if tv is None:
+            raise ValueError("no counts: nothing seeded or processed yet")
         return (
             tv.groupBy(*self.keys)
             .agg(F.sum(DIFF).alias(self.alias))
@@ -631,10 +415,11 @@ class KCoreMaintainer:
         self.k = k
         self.max_iters = max_iters
         self._scratch = Scratch()
-        self.edges = TraceView(
+        self.edges = Arrangement(
             spark,
+            (state_dir + "/edges") if state_dir else None,
+            key=["src"],
             compact_every=compact_every,
-            bucket_path=(state_dir + "/edges") if state_dir else None,
             n_buckets=n_buckets,
         )
         # Multiset support, NOT set semantics: (a,b) and (b,a) both inserted
@@ -645,8 +430,7 @@ class KCoreMaintainer:
             edges.select(F.col("dst").alias("src"), F.col("src").alias("dst"))
         )
         self.edges.seed(
-            sym.select("src", "dst", F.lit(1).cast("long").alias(DIFF)),
-            key=["src"],
+            sym.select("src", "dst", F.lit(1).cast("long").alias(DIFF))
         )
         # Initial fixpoint: full peel from all nodes.
         all_nodes = self._scratch.ck(sym.select(F.col("src").alias("node")).distinct())
@@ -810,7 +594,7 @@ class KCoreMaintainer:
                     DIFF,
                 )
             )
-            # TraceView.compact frees parts via release_checkpoint, and the
+            # Arrangement.compact frees parts via release_checkpoint, and the
             # lazy sym view would otherwise leak the backing blocks.
             self.edges.append(self._scratch.hand_off(delta, sym_part))
 
@@ -901,15 +685,9 @@ class KCoreMaintainer:
         batch operator's output. Snapshot read — one consolidation of the
         live edge support plus two membership semijoins (no broadcast of the
         core; Spark picks the join strategy by size)."""
-        v = self.edges.view()
-        sup = (
-            v.groupBy("src", "dst")
-            .agg(F.sum(DIFF).alias("__s"))
-            .filter(F.col("__s") > 0)
-            .select("src", "dst")
-        )
         return (
-            sup.join(
+            self._support_from(None)
+            .join(
                 self.core.withColumnRenamed("node", "src"), ["src"], "left_semi"
             )
             .join(

@@ -12,7 +12,7 @@ from differential_dataflow_spark.operators.arrange import Arrangement
 
 
 def _arr(spark, tmp_path):
-    arr = Arrangement(spark, str(tmp_path / "trace"), key=["k"], num_partitions=2)
+    arr = Arrangement(spark, str(tmp_path / "trace"), key=["k"])
     arr.insert_batch(
         DiffCollection.from_updates(
             spark,

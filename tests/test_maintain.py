@@ -60,6 +60,53 @@ def test_count_maintainer_matches_batch(spark, tmp_path, bucketed):
     got_state = {r.k: r.n for r in cm.counts().collect()}
     assert got_state == {k: v for k, v in state.items() if v}
     cm.release()
+    # A durable trace is hash-bucketed by key: no key is a usage error.
+    with pytest.raises(ValueError):
+        CountMaintainer(spark, keys=[], state_dir=str(tmp_path / "nokey"))
+
+
+def test_count_maintainer_resumes_after_kill(spark, tmp_path):
+    # Kill and resume: a maintainer on a durable state_dir processes three
+    # batches (the third sealed after a compaction) and is dropped without
+    # release; a new one on the same directory must hold every sealed batch
+    # and continue the update stream exactly like an uninterrupted run.
+    def make(name):
+        return CountMaintainer(
+            spark,
+            keys=["k"],
+            alias="n",
+            compact_every=2,
+            state_dir=str(tmp_path / name),
+            n_buckets=4,
+        )
+
+    def run(cm, batches):
+        return [
+            sorted(
+                (r.k, r.n, r.diff)
+                for r in cm.process_batch(
+                    spark.createDataFrame(b, "k long, diff long")
+                ).collect()
+            )
+            for b in batches
+        ]
+
+    def counts(cm):
+        return {r.k: r.n for r in cm.counts().collect()}
+
+    seed = spark.createDataFrame([(0, 3), (1, 1)], "k long, count long")
+    batches = [[(0, 1)], [(1, 1)], [(2, 5)], [(0, -4), (2, 1), (3, 2)]]
+    whole = make("whole")
+    whole.seed_counts(seed)
+    want = run(whole, batches)
+    first = make("killed")
+    first.seed_counts(seed)
+    got = run(first, batches[:3])
+    resumed = make("killed")
+    assert counts(resumed) == {0: 4, 1: 2, 2: 5}
+    got += run(resumed, batches[3:])
+    assert got == want
+    assert counts(resumed) == counts(whole) == {1: 2, 2: 6, 3: 2}
 
 
 def test_delta_join_in_memory_matches_batch(spark):

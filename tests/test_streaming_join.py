@@ -3,6 +3,7 @@ arrangement-backed DeltaJoin vs the batch engine's differential join."""
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from differential_dataflow_spark import DiffCollection
@@ -93,6 +94,8 @@ def test_delta_join_matches_batch(spark, tmp_path):
 
 def test_delta_join_one_sided_batches(spark, tmp_path):
     dj = DeltaJoin(spark, str(tmp_path / "state"), on=["k"])
+    with pytest.raises(ValueError):
+        dj.process_batch(None, None)  # a batch needs at least one side
     dl = spark.createDataFrame([(0, 1, 1)], "k long, v1 long, diff long")
     assert dj.process_batch(dl, None) is None  # right side unknown yet
     dr = spark.createDataFrame([(0, 7, 1)], "k long, v2 long, diff long")
@@ -137,7 +140,7 @@ def test_delta_join_resumes_from_state_dir(spark, tmp_path):
     dj1 = DeltaJoin(spark, str(tmp_path / "state"), on=["k"], compact_every=3)
     run(dj1, 0, 2)
     dj2 = DeltaJoin(spark, str(tmp_path / "state"), on=["k"], compact_every=3)
-    assert dj2._batch == 2  # resumed past the sealed epochs
+    assert dj2.epoch == 2  # resumed past the sealed epochs
     run(dj2, 2, 4)
     got = sorted((k + (d,)) for k, d in acc.items() if d != 0)
 
