@@ -9,11 +9,12 @@ in memory by default, so a micro-batch round never rewrites or re-reads state
 from disk, or durable and key-bucketed under ``state_dir``:
 
 - ``CountMaintainer`` — incremental ``count_total`` against an arrangement
-  (reference src/operators/count.rs:81-123): per batch, only the TOUCHED keys
-  are looked up (broadcast semijoin of the delta's key set against the
-  key-bucketed state) and the operator emits the ``(key, old, -1),
-  (key, new, +1)`` retraction pairs. With ``state_dir`` it resumes after a
-  restart from every part it sealed.
+  (reference src/operators/count.rs:81-123): per batch, only the TOUCHED keys'
+  trace rows are read (broadcast semijoin of the delta's key set against the
+  key-bucketed state), one aggregate over them and the raw delta gives each
+  key its old count and net change, and the operator emits the ``(key, old,
+  -1), (key, new, +1)`` retraction pairs. With ``state_dir`` it resumes
+  after a restart from every part it sealed.
 - ``IncrementalReachability`` and ``IncrementalBFS`` — graph programs run on
   the generic maintained fixpoint (streaming/fixpoint.py): reachability over
   distinct-valued ``node`` facts, BFS over min-valued ``(node, dist)`` facts,
@@ -260,11 +261,14 @@ class CountMaintainer:
     maintenance loop (src/operators/count.rs:81-123 — walk the sealed batch
     against the trace, emit -old/+new per changed key).
 
-    Per ``process_batch``: consolidate the delta (one small shuffle), look up
-    ONLY the touched keys' accumulated counts (broadcast semijoin against the
-    key-partitioned state — the state itself never shuffles), emit retraction
-    pairs, seal the delta as a new part. The returned DataFrame is valid
-    until the next ``process_batch`` (which may compact).
+    Per ``process_batch``: seal the raw delta as one checkpointed part (the
+    trace's fold consolidates it), select ONLY the touched keys' trace rows
+    (broadcast semijoin of the delta's keys against the key-partitioned
+    state — the state itself never shuffles), and run ONE aggregate over
+    those rows and the delta, grouped by key, for each key's old count and
+    net change; every key whose net change is non-zero emits its retraction
+    pair. The returned DataFrame is valid until the next ``process_batch``
+    (which may compact).
     """
 
     def __init__(
@@ -306,31 +310,32 @@ class CountMaintainer:
 
     def _process_batch(self, delta: DataFrame) -> DataFrame:
         self.trace.maybe_compact()
+        # The raw delta, unconsolidated: the trace's fold consolidates it, and
+        # the aggregate below sums duplicate and cancelling rows per key.
         d = tracked_local_checkpoint(
-            delta.groupBy(*self.keys)
-            .agg(F.sum(DIFF).alias(DIFF))
-            .filter(F.col(DIFF) != 0)
+            delta.select(*self.keys, F.col(DIFF).cast("long").alias(DIFF))
         )
-        tv = self.trace.lookup_view(d.select(*self.keys))
-        if tv is None:
-            old = d.select(*self.keys, F.lit(0).cast("long").alias("__old")).limit(0)
-        else:
-            old = (
-                tv.join(F.broadcast(d.select(*self.keys)), self.keys, "left_semi")
-                .groupBy(*self.keys)
-                .agg(F.sum(DIFF).alias("__old"))
-            )
-        # ``old`` is DELTA-bounded (per-key sums of only the touched keys),
-        # so pin it as the broadcast build side: the left-outer join then
-        # streams the delta map-side instead of waiting for AQE to convert
-        # a planned sort-merge after both exchanges ran.
+        rows = d.select(
+            *self.keys, F.lit(0).cast("long").alias("__old"), F.col(DIFF).alias("__dn")
+        )
+        keys = d.select(*self.keys)
+        tv = self.trace.lookup_view(keys)
+        if tv is not None:
+            touched = tv.join(F.broadcast(keys), self.keys, "left_semi")
+            rows = touched.select(
+                *self.keys, F.col(DIFF).alias("__old"), F.lit(0).cast("long").alias("__dn")
+            ).unionByName(rows)
+        # ONE aggregate over the touched trace rows and the delta gives each
+        # touched key its old count and its net change; keys whose changes
+        # cancel emit nothing.
         st = (
-            d.withColumnRenamed(DIFF, "__dn")
-            .join(F.broadcast(old), self.keys, "left")
+            rows.groupBy(*self.keys)
+            .agg(F.sum("__old").alias("__old"), F.sum("__dn").alias("__dn"))
+            .filter(F.col("__dn") != 0)
             .select(
                 *self.keys,
-                F.coalesce("__old", F.lit(0)).alias("__old"),
-                (F.coalesce("__old", F.lit(0)) + F.col("__dn")).alias("__new"),
+                "__old",
+                (F.col("__old") + F.col("__dn")).alias("__new"),
             )
         )
         # One pass (no self-union, which would recompute the state lookup

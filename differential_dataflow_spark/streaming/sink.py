@@ -10,8 +10,10 @@ that make replay deduplicating and reorder-tolerant. Spark translation:
   foreachBatch discipline);
 - data lands as parquet under ``data/batch_id=N/`` (write-then-mark: the
   commit marker is written only after the data write succeeds);
-- the commit log records per-batch lineage — row count, per-partition counts,
-  watermark — the analogue of Progress statements, queryable as a table.
+- the commit log records per-batch lineage — row count and per-output-file
+  counts — the analogue of Progress statements, queryable as a table. The
+  counts are read in the driver from the parquet footers of the files the
+  write just committed, so building the marker launches no Spark job.
 
 On a real deployment the same structure maps to an Iceberg table with
 snapshot-id-as-epoch commits; here it is a plain directory protocol so the
@@ -22,11 +24,37 @@ from __future__ import annotations
 
 import json
 import os
+import re
 import time
 from pathlib import Path
 
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
-from pyspark.sql import functions as F
+
+
+_PART = re.compile(r"part-(\d+)")
+
+
+def _file_counts(out_dir: Path) -> dict[int, int]:
+    """Row counts of the parquet files under ``out_dir``, from their footers,
+    keyed by output-file ordinal.
+
+    Progress "partition" ids are OUTPUT-FILE ordinals post-write (the
+    part-NNNNN number), not the micro-batch's in-flight Spark partition ids —
+    the durable artifact is the file set, so lineage is keyed by it. Files
+    Spark's reader skips (``_SUCCESS``, ``.crc``) are skipped, as are empty
+    files; a foreign file name falls into ordinal -1 rather than failing the
+    commit."""
+    counts: dict[int, int] = {}
+    for f in sorted(out_dir.iterdir()):
+        if f.name.startswith(("_", ".")):
+            continue
+        rows = pq.read_metadata(f).num_rows
+        if rows:
+            m = _PART.search(f.name)
+            ordinal = int(m.group(1)) if m else -1
+            counts[ordinal] = counts.get(ordinal, 0) + rows
+    return counts
 
 
 class ExactlyOnceSink:
@@ -42,37 +70,22 @@ class ExactlyOnceSink:
     def is_committed(self, batch_id: int) -> bool:
         return self._commit_path(batch_id).exists()
 
-    def write_batch(self, df: DataFrame, batch_id: int) -> None:
-        """foreachBatch body: idempotent write of one micro-batch."""
+    def write_batch(self, df: DataFrame | None, batch_id: int) -> None:
+        """foreachBatch body: idempotent write of one micro-batch. ``None``
+        (an operator with nothing to emit yet) commits an empty batch with no
+        data directory."""
         if self.is_committed(batch_id):
             return  # replayed batch — exactly-once skip
-        out_dir = str(self.root / "data" / f"batch_id={batch_id}")
-        # Write FIRST, then derive the lineage counts from the written files:
-        # computing counts from `df` before the write would evaluate the
-        # micro-batch twice, and with a nondeterministic upstream plan
-        # (spark_partition_id depends on scheduling/AQE) the Progress counts
-        # could disagree with the data actually committed.
-        df.write.mode("overwrite").parquet(out_dir)
-        written = df.sparkSession.read.parquet(out_dir)
-        # Progress "partition" ids are OUTPUT-FILE ordinals post-write (the
-        # part-NNNNN number), not the micro-batch's in-flight Spark partition
-        # ids — the durable artifact is the file set, so lineage is keyed by
-        # it. Non-matching file names (e.g. a foreign file dropped into the
-        # dir) fall into ordinal -1 rather than failing the commit.
-        ord_expr = F.regexp_extract(F.input_file_name(), r"part-(\d+)", 1)
-        counts_df = (
-            written.withColumn(
-                "partition",
-                F.when(ord_expr == "", F.lit(-1)).otherwise(
-                    ord_expr.cast("int")
-                ),
-            )
-            .groupBy("partition")
-            .count()
-        )
-        part_counts = {
-            int(r["partition"]): int(r["count"]) for r in counts_df.collect()
-        }
+        part_counts: dict[int, int] = {}
+        if df is not None:
+            out_dir = self.root / "data" / f"batch_id={batch_id}"
+            # Write FIRST, then derive the lineage counts from the written
+            # files: computing counts from `df` before the write would
+            # evaluate the micro-batch twice, and with a nondeterministic
+            # upstream plan (spark_partition_id depends on scheduling/AQE) the
+            # Progress counts could disagree with the data actually committed.
+            df.write.mode("overwrite").parquet(str(out_dir))
+            part_counts = _file_counts(out_dir)
         marker = {
             "query": self.query_name,
             "batch_id": batch_id,

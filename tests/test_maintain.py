@@ -109,6 +109,55 @@ def test_count_maintainer_resumes_after_kill(spark, tmp_path):
     assert counts(resumed) == counts(whole) == {1: 2, 2: 6, 3: 2}
 
 
+@pytest.mark.parametrize("bucketed", [False, True])
+def test_count_maintainer_multiset_deltas(spark, tmp_path, bucketed):
+    # The delta is sealed raw, unconsolidated: a batch may carry a key
+    # several times, with weights that cancel or add up. Folding every
+    # batch (compact_every=1) must keep the trace equal to a recompute.
+    def make():
+        return CountMaintainer(
+            spark,
+            keys=["k"],
+            alias="n",
+            compact_every=1,
+            state_dir=str(tmp_path / "state") if bucketed else None,
+            n_buckets=4,
+        )
+
+    def counts(m):
+        return {r.k: r.n for r in m.counts().collect()}
+
+    seed = [(0, 3), (1, 1)]
+    batches = [
+        # +1 and -1 in one batch emit nothing; a new key inserted twice
+        # counts 2; a zero weight is no change.
+        ([(0, 1), (9, 1), (0, -1), (9, 1), (1, 0)], [(9, 2, 1)]),
+        # A cancelling pair beside a net change.
+        ([(1, 1), (1, 1), (1, -1), (5, 1), (5, -1)], [(1, 1, -1), (1, 2, 1)]),
+        ([(9, -1), (9, -1), (0, 2), (0, -2)], [(9, 2, -1)]),
+        ([(2, 1), (2, 1), (2, 1), (1, -2)], [(1, 2, -1), (2, 3, 1)]),
+    ]
+    cm = make()
+    cm.seed_counts(spark.createDataFrame(seed, "k long, count long"))
+    for updates, want in batches:
+        delta = spark.createDataFrame(updates, "k long, diff long")
+        got = sorted((r.k, r.n, r.diff) for r in cm.process_batch(delta).collect())
+        assert got == want
+    history = seed + [u for updates, _ in batches for u in updates]
+    recompute = {
+        r.k: r.n
+        for r in spark.createDataFrame(history, "k long, diff long")
+        .groupBy("k")
+        .agg(F.sum("diff").alias("n"))
+        .filter("n != 0")
+        .collect()
+    }
+    assert counts(cm) == recompute == {0: 3, 2: 3}
+    if bucketed:
+        assert counts(make()) == recompute
+    cm.release()
+
+
 def test_delta_join_in_memory_matches_batch(spark):
     # The in-memory spine (state_dir=None) must replicate the parquet-backed
     # DeltaJoin semantics: 4 epochs including retractions, compact_every=2.

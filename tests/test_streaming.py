@@ -145,6 +145,94 @@ def test_exactly_once_sink_replay(spark, tmp_path):
     assert all(e["rows"] == 5 for e in lineage)
 
 
+def _read_back_counts(spark, out_dir):
+    """Per-file-ordinal row counts by reading the written files back through
+    Spark: the lineage computation the footer-based one replaces."""
+    ordinal = F.regexp_extract(F.input_file_name(), r"part-(\d+)", 1)
+    return {
+        int(r["partition"]): int(r["count"])
+        for r in spark.read.parquet(str(out_dir))
+        .withColumn(
+            "partition",
+            F.when(ordinal == "", F.lit(-1)).otherwise(ordinal.cast("int")),
+        )
+        .groupBy("partition")
+        .count()
+        .collect()
+    }
+
+
+def test_exactly_once_sink_lineage_from_footers(spark, tmp_path):
+    import json
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from differential_dataflow_spark.streaming.sink import _file_counts
+
+    sink = ExactlyOnceSink(str(tmp_path / "out"), "lineage")
+    df = spark.range(0, 103, numPartitions=4).withColumnRenamed("id", "v")
+    sink.write_batch(df, 0)
+    out_dir = tmp_path / "out" / "data" / "batch_id=0"
+    want = _read_back_counts(spark, out_dir)
+    assert len(want) == 4 and sum(want.values()) == 103
+    (marker,) = sink.lineage()
+    assert marker["rows"] == 103
+    assert {int(k): v for k, v in marker["partition_counts"].items()} == want
+    # A file whose name carries no part ordinal counts under -1, as Spark's
+    # read-back keys it.
+    pq.write_table(pa.table({"v": [7, 8]}), out_dir / "foreign.parquet")
+    assert _file_counts(out_dir) == _read_back_counts(spark, out_dir)
+    assert _file_counts(out_dir)[-1] == 2
+
+    # An empty batch writes one zero-row file, which lineage skips.
+    sink.write_batch(df.limit(0), 1)
+    marker = json.loads((tmp_path / "out" / "commits" / "lineage-1.json").read_text())
+    assert marker["rows"] == 0 and marker["partition_counts"] == {}
+
+
+def test_exactly_once_sink_commits_none_batch(spark, tmp_path):
+    # An operator with nothing to emit yet returns None (DeltaJoin before
+    # both sides can join); the sink commits the batch id with no data.
+    sink = ExactlyOnceSink(str(tmp_path / "out"), "none")
+    sink.write_batch(None, 0)
+    sink.write_batch(spark.range(0, 3, numPartitions=1).withColumnRenamed("id", "v"), 1)
+    sink.write_batch(None, 1)  # already committed: skipped
+    assert not (tmp_path / "out" / "data" / "batch_id=0").exists()
+    assert [(e["batch_id"], e["rows"], e["partition_counts"]) for e in sink.lineage()] == [
+        (0, 0, {}),
+        (1, 3, {"0": 3}),
+    ]
+    assert sorted(r.v for r in sink.read_all(spark).collect()) == [0, 1, 2]
+
+
+def test_exactly_once_sink_write_is_one_job(spark, tmp_path):
+    # Lineage comes from the written footers, so writing an already
+    # materialized frame launches the write job and nothing else.
+    from differential_dataflow_spark.session import (
+        release_checkpoint,
+        tracked_local_checkpoint,
+    )
+
+    sc = spark.sparkContext
+    frame = tracked_local_checkpoint(spark.range(0, 50, numPartitions=3))
+    sink = ExactlyOnceSink(str(tmp_path / "out"), "jobs")
+    group = f"sink-jobs-{tmp_path.name}"
+    tracker = sc._jsc.statusTracker()
+    sc.setJobGroup(group, "ExactlyOnceSink.write_batch job count")
+    try:
+        before = len(tracker.getJobIdsForGroup(group))
+        sink.write_batch(frame, 0)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        after = len(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    release_checkpoint(frame)
+    assert after - before == 1
+    assert sink.lineage()[0]["rows"] == 50
+
+
 def test_checkpoint_restart_exactly_once(spark, tmp_path):
     """Kill after epoch k, resume with the same checkpoint: final consolidated
     multiset equals the uninterrupted run (FIXTURES.md §7.7)."""
