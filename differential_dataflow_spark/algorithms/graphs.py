@@ -273,6 +273,7 @@ def strongly_connected_components(
         color_df = _tckpt(
             colors.df.select("node", F.col("label").alias("color"))
         )
+        _release(colors.df)
 
         # 2. backward reach from each pivot within its color class.
         colored_edges = (

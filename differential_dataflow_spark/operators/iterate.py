@@ -12,7 +12,7 @@ changed — ``new ⊎ (−old)`` consolidating to empty is exactly the reference
 
 Loop discipline (matters at scale): every round's result is locally
 checkpointed (truncating both lineage and analysis cost to O(1) per round)
-and the previous round's checkpoint is **unpersisted** — without this the
+and checkpoints a loop no longer needs are **released** — without this the
 block manager accumulates one cached RDD per round and round latency degrades
 super-linearly (observed: 0.5s/round → 110s/round by round 21).
 
@@ -20,47 +20,264 @@ Engines:
 
 - ``iterate`` — general fixpoint for arbitrary (non-monotone) logic over full
   update collections.
-- ``semi_naive`` — the scalable path for monotone, distinct-valued logic
-  (reachability / transitive closure: README.md:22-31). Only the *frontier*
-  (newly derived facts) is expanded each round — the differential behavior of
-  the reference's iterate, where only changed updates flow — so total work is
-  O(Σ|new facts|). Internally plain column-pruned DataFrames; dedup is one
-  ``left_anti`` against the checkpointed accumulated total per round (weight
-  bookkeeping is unnecessary for distinct sets).
-- ``iterate_keyed_min`` — BFS/label-propagation shape
-  (src/algorithms/graphs/bfs.rs:36-49): per-key minimum refined per round,
-  expanding only improved keys.
+- ``closure`` — THE semi-naive round driver: every frontier loop of the
+  engine runs on it. Only the *frontier* (newly derived facts) is expanded
+  each round — the differential behavior of the reference's iterate, where
+  only changed updates flow — so total work is O(Σ|new facts|). Facts are
+  distinct-valued or min-valued (:class:`FactKind`); the known set is a list
+  of disjoint checkpointed parts, never rewritten. Its callers:
+  ``semi_naive`` (distinct, over DiffCollections: reachability / transitive
+  closure, README.md:22-31), ``iterate_keyed_min`` (min-valued: BFS and
+  label propagation, src/algorithms/graphs/bfs.rs:36-49),
+  ``mutual_semi_naive`` (one driver round per relation per round),
+  ``MaintainedFixpoint``'s insert expansion and overdelete/rederive closures
+  (streaming/fixpoint.py) and ``KCoreMaintainer``'s GROW closure
+  (streaming/maintain.py).
+- ``iterate_with_priorities`` — records entering at staged rounds, then
+  ``iterate``.
 """
 
 from __future__ import annotations
 
 from collections.abc import Callable, Sequence
+from concurrent.futures import ThreadPoolExecutor
+from functools import reduce
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
-from differential_dataflow_spark.collection import DIFF, EPOCH, DiffCollection
+from differential_dataflow_spark.collection import DIFF, DiffCollection
 from differential_dataflow_spark.session import (
-    counted_local_checkpoint,
+    Scratch,
     release_checkpoint,
     tracked_local_checkpoint,
 )
 
 Logic = Callable[[DiffCollection], DiffCollection]
 
+# The frontier gate, read at call time: a frontier of at most this many rows
+# is broadcast into the step's joins (the step's relations stream map-side
+# instead of being exchanged every round), and its round broadcasts the
+# known parts into the anti-join — or, against a big known set, the
+# candidates (advance's tail). Interleaved A/B at 8M-conversation scale
+# measured the plain anti-join faster for ~1M-row frontiers (the broadcast
+# build is serial), hence 200k.
+FRONTIER_ROWS = 200_000
+# The broadcast tail only pays off against a known set at least this big.
+TAIL_KNOWN_ROWS = 500_000
+
 
 class FixpointNotReached(RuntimeError):
     pass
 
 
-def _ckpt(df: DataFrame) -> DataFrame:
-    # Tracked so _release actually frees the checkpoint blocks —
-    # DataFrame.unpersist() is a no-op on localCheckpoint RDDs.
-    return tracked_local_checkpoint(df, eager=True)
+def _union(dfs: Sequence[DataFrame]) -> DataFrame:
+    return reduce(DataFrame.unionByName, dfs)
 
 
-def _release(df: DataFrame) -> None:
-    release_checkpoint(df)
+class FactKind:
+    """How derived facts merge. Distinct-valued (``min_col=None``): a fact is
+    derived or not. Min-valued: column ``min_col`` is merged by MIN per key
+    (the other fact columns), the reference's ``iterate`` + ``reduce(min)``
+    idiom (src/algorithms/graphs/bfs.rs: ``(node, dist)`` keyed by
+    ``node``)."""
+
+    def __init__(self, fact_cols: Sequence[str], min_col: str | None = None):
+        self.fact_cols = list(fact_cols)
+        self.min_col = min_col
+        self.key_cols = [c for c in self.fact_cols if c != min_col]
+
+    def merge(self, cands: DataFrame) -> DataFrame:
+        """One fact per distinct candidate, or per key at its least value."""
+        cands = cands.select(*self.fact_cols)
+        if self.min_col is None:
+            return cands.distinct()
+        out = cands.groupBy(*self.key_cols).agg(
+            F.min(self.min_col).alias(self.min_col)
+        )
+        if out.columns != self.fact_cols:
+            out = out.select(*self.fact_cols)
+        return out
+
+    def by_key(
+        self, cands: DataFrame, other: DataFrame, value_test, how: str
+    ) -> DataFrame:
+        """Min-valued facts only: join ``cands`` against ``other`` on the
+        key, with ``value_test(cand value, other value)`` as the extra
+        condition (a broadcast hint on ``other`` carries through)."""
+        o = {c: f"__o_{c}" for c in self.fact_cols}
+        other = other.select(*(F.col(c).alias(a) for c, a in o.items()))
+        cond = [F.col(k) == F.col(o[k]) for k in self.key_cols]
+        cond.append(value_test(F.col(self.min_col), F.col(o[self.min_col])))
+        return cands.join(other, reduce(lambda a, b: a & b, cond), how)
+
+    def fresh(self, cands: DataFrame, seen: DataFrame) -> DataFrame:
+        """Candidates ``seen`` does not already cover: absent facts, or
+        (min-valued) keys absent from ``seen`` or at a lower value than every
+        value ``seen`` holds for them."""
+        if self.min_col is None:
+            return cands.join(seen, self.fact_cols, "left_anti")
+        return self.by_key(cands, seen, lambda v, s: s <= v, "left_anti")
+
+    def improve(self, cands: DataFrame, current: DataFrame) -> DataFrame:
+        """The ``(facts..., diff)`` part that adds merged ``cands`` to the
+        ``current`` facts: +1 per fresh fact and, for an improved min-valued
+        key, −1 for the value it held (``current`` holds one fact per
+        key)."""
+        one = F.lit(1).cast("long").alias(DIFF)
+        if self.min_col is None:
+            return self.fresh(cands, current).select(*self.fact_cols, one)
+        v = self.min_col
+        old = current.select(*self.key_cols, F.col(v).alias("__old"))
+        better = cands.join(old, self.key_cols, "left").filter(
+            F.col("__old").isNull() | (F.col(v) < F.col("__old"))
+        )
+        minus_one = F.lit(-1).cast("long").alias(DIFF)
+        pair = F.array(
+            F.struct(F.col(v).alias(v), one),
+            F.struct(F.col("__old").alias(v), minus_one),
+        )
+        rows = better.select(
+            *self.key_cols,
+            F.inline(F.filter(pair, lambda r: r[v].isNotNull())),
+        )
+        if rows.columns != [*self.fact_cols, DIFF]:
+            rows = rows.select(*self.fact_cols, DIFF)
+        return rows
+
+
+def gate(frontier: DataFrame, n_rows: int | None) -> DataFrame:
+    """The frontier as a step reads it: broadcast when it is counted and
+    under the gate."""
+    if n_rows is not None and n_rows <= FRONTIER_ROWS:
+        return F.broadcast(frontier)
+    return frontier
+
+
+def advance(
+    cands: DataFrame,
+    known: Sequence[DataFrame],
+    kind: FactKind,
+    scratch: Scratch,
+    n_frontier: int | None,
+    n_known: int,
+    isolate: bool = False,
+) -> tuple[DataFrame, int]:
+    """One round: merged ``cands`` (from a frontier of ``n_frontier`` rows)
+    minus the ``known`` parts (``n_known`` counted rows), as ONE counted
+    checkpoint held by ``scratch``; the count is the convergence probe.
+
+    Over the gate the planner picks the anti-join; under it the known parts
+    are broadcast, or — against ``TAIL_KNOWN_ROWS`` or more — the
+    small-frontier tail broadcasts the checkpointed candidates against the
+    parts (no exchange of the known set) and anti-joins them against the
+    small matched set, for one more O(new) job (two unless ``isolate``).
+
+    ``isolate`` checkpoints the candidates first (one more job; released
+    with the round), for opaque steps whose plan reads a known part itself:
+    a plan holding the same checkpoint twice can trip Spark's
+    localCheckpoint stats rewrite ("key not found: <attr>")."""
+    seen = _union(known)
+    small = n_frontier is not None and n_frontier <= FRONTIER_ROWS
+    tail = small and n_known >= TAIL_KNOWN_ROWS
+    tmp = Scratch()
+    if isolate or tail:
+        cands = tmp.ck(cands)
+    if tail:
+        keys = kind.key_cols
+        seen = tmp.ck(
+            seen.join(F.broadcast(cands.select(*keys)), keys, "left_semi")
+        )
+    out = scratch.ckn(kind.fresh(cands, F.broadcast(seen) if small else seen))
+    tmp.reap()
+    return out
+
+
+def closure(
+    frontier: DataFrame,
+    n_frontier: int | None,
+    step: Callable[[DataFrame], DataFrame],
+    kind: FactKind,
+    seen: list[DataFrame],
+    scratch: Scratch,
+    within: Callable[[DataFrame], DataFrame] | None = None,
+    exclude: DataFrame | None = None,
+    seal: Callable[[DataFrame], tuple[DataFrame, int]] | None = None,
+    isolate: bool = False,
+    max_iters: int = 10_000,
+) -> list[DataFrame]:
+    """Close ``frontier`` (``n_frontier`` rows, ``None`` if uncounted) under
+    ``step``; returns the parts derived, one per round. A round is
+
+      new = advance(merge(within(step(gate(frontier)))), seen ∪ exclude)
+
+    ``within`` bounds the candidates before the merge (a min-valued key
+    keeps its least admissible value); ``exclude`` holds facts the closure
+    neither enters nor passes through (taken to be small). ``seen`` is the
+    known set as disjoint checkpointed parts, the frontier usually among
+    them, and grows IN PLACE, so a step reading the closure so far sees it.
+    ``seal(cands)`` replaces :func:`advance` for a caller whose known facts
+    live elsewhere (MaintainedFixpoint's derived trace). One action per
+    round (two with ``isolate``, see :func:`advance`); the parts stay held
+    by ``scratch``.
+
+    The known set is never union-rewritten: that made late small-frontier
+    rounds cost O(|total|) block-store writes (37s for a 1-new-fact round
+    at 3.9M total). Every part is checkpointed, so plans stay O(1): under
+    persist-only lineage the plan doubled per round (0.8s -> 18.7s by round
+    4 on a 20-node graph)."""
+    n_known = (n_frontier or 0) if any(p is frontier for p in seen) else 0
+    start = len(seen)
+    for _ in range(max_iters):
+        if n_frontier == 0:
+            return seen[start:]
+        cands = step(gate(frontier, n_frontier)).select(*kind.fact_cols)
+        if within is not None:
+            cands = within(cands)
+        cands = kind.merge(cands)
+        if seal is not None:
+            frontier, n_frontier = seal(cands)
+        else:
+            known = seen if exclude is None else [*seen, exclude]
+            frontier, n_frontier = advance(
+                cands, known, kind, scratch, n_frontier, n_known, isolate
+            )
+        if n_frontier:
+            seen.append(frontier)
+            n_known += n_frontier
+    raise FixpointNotReached(f"no fixed point within {max_iters} iterations")
+
+
+def _closed(
+    initial: DataFrame, expand: Logic, kind: FactKind, max_iters: int
+) -> DiffCollection:
+    """The closed set of ``initial`` under ``expand`` (min-valued: each key
+    at its least value), carrying every part's storage handle so
+    release_checkpoint on it frees the whole set."""
+    scratch = Scratch()
+    base, n_base = scratch.ckn(kind.merge(initial))
+    seen = [base]
+    closure(
+        base,
+        n_base,
+        lambda f: expand(DiffCollection.from_df(f)).df,
+        kind,
+        seen,
+        scratch,
+        isolate=True,
+        max_iters=max_iters,
+    )
+    scratch.reap(keep=seen)
+    return _collection(seen, kind)
+
+
+def _collection(parts: list[DataFrame], kind: FactKind) -> DiffCollection:
+    out = _union(parts)
+    if kind.min_col is not None:
+        out = kind.merge(out)
+    out._ckpt_rdds = [h for p in parts for h in getattr(p, "_ckpt_rdds", ())]
+    return DiffCollection.from_df(out)
 
 
 def iterate(
@@ -75,9 +292,11 @@ def iterate(
     (consolidate + change test). ``strict=True`` raises if ``max_iters`` is
     hit without convergence.
     """
-    current = _ckpt(initial.consolidate().df)
+    current = tracked_local_checkpoint(initial.consolidate().df)
     for _ in range(max_iters):
-        nxt = _ckpt(logic(DiffCollection(current)).consolidate().df)
+        nxt = tracked_local_checkpoint(
+            logic(DiffCollection(current)).consolidate().df
+        )
         delta = (
             DiffCollection(nxt)
             .concat(DiffCollection(current).negate())
@@ -85,9 +304,9 @@ def iterate(
             .df
         )
         if delta.isEmpty():
-            _release(current)
+            release_checkpoint(current)
             return DiffCollection(nxt)
-        _release(current)
+        release_checkpoint(current)
         current = nxt
     if strict:
         raise FixpointNotReached(f"no fixed point within {max_iters} iterations")
@@ -98,159 +317,25 @@ def semi_naive(
     roots: DiffCollection,
     expand: Logic,
     max_iters: int = 10_000,
-    broadcast_total: bool = False,
 ) -> DiffCollection:
     """Monotone fixpoint: total = roots ∪ expand(roots) ∪ expand²(...) as a
-    *distinct* collection, computed by expanding only the per-round frontier.
+    *distinct* collection, computed by expanding only the per-round frontier
+    (:func:`closure` over distinct facts).
 
     ``expand`` maps a frontier collection (weights 1, epoch 0) to candidate
     new facts with the same payload columns; candidates already known are
     discarded with a ``left_anti`` join against the accumulated total. The
     result collapses epochs: it is the fixpoint of the final accumulated
     input (per-epoch incremental iteration is the streaming engine's job).
-
-    Default loop shape — SHUFFLE-ALIGNED, checkpointed every round, with the
-    accumulated total kept as a LIST of disjoint checkpointed frontier parts
-    (never rewritten):
-
-      new     = checkpoint((DISTINCT expand(frontier)) ANTI union(parts))
-      parts  += [new];  emptiness = count(new) == 0
-
-    Every round's new facts are locally checkpointed, so plans stay O(1) —
-    without this the union/anti lineage doubles per round and Catalyst
-    analysis explodes exponentially (measured: 0.8s -> 18.7s by round 4 on a
-    20-node graph under persist-only lineage). The total is NEVER union+
-    re-checkpointed: that rewrite made late small-frontier rounds cost
-    O(|total|) in block-store writes (measured 37s for a 1-new-fact round at
-    3.9M total) and anti-scaled with thread count via allocation/GC pressure.
-    The union of checkpointed parts is free to extend; the anti-join
-    exchanges the (key-columns-only) parts union once per round, every byte
-    in parallel. DISTINCT runs BEFORE the anti-join, so the duplicate factor
-    of ``expand`` (e.g. 4x for a 4-out expander) never enters the join, and
-    the join reuses distinct's hash partitioning (one exchange for the
-    candidate side). Per round: 1 checkpoint + 1 count, both O(new).
-
-    The ``broadcast_total=True`` variant instead hashes the whole
-    accumulated total into a broadcast relation every round — a
-    single-threaded build that flattens 8->32 scaling at multi-million-node
-    totals and dies when the closed set outgrows one executor; use it only
-    for small closed sets.
+    DISTINCT runs BEFORE the anti-join, so the duplicate factor of
+    ``expand`` (e.g. 4x for a 4-out expander) never enters the join.
     """
-    import os as _os
-    import time as _time
-
-    _debug = bool(_os.environ.get("DD_SPARK_ITER_DEBUG"))
-    key = roots.payload_columns
-    base = roots.consolidate_final().filter(F.col(DIFF) > 0).select(*key)
-    if broadcast_total:
-        return _semi_naive_broadcast(base, expand, key, max_iters, _debug)
-    parts = [_ckpt(base)]
-    frontier = parts[0]
-    n_frontier = None  # carried from the previous round's count — no extra job
-    total_count = 0  # lower bound: counts of parts[1:]; parts[0] uncounted
-    # Frontier-size gate for the broadcast-tail round shape: under it the
-    # round streams the accumulated total map-side against a broadcast of
-    # the candidate set instead of exchanging+sorting the whole total.
-    # Interleaved A/B at 8M-conv scale measured the plain anti-join FASTER
-    # for ~1M-row frontiers on this host (broadcast build of multi-million-
-    # row candidate relations is serial and beats the parallel exchange only
-    # for small frontiers), so the default stays at 200k rows; env knob for
-    # clusters where executor-memory/broadcast economics differ.
-    SMALL_FRONTIER = int(
-        _os.environ.get("SPARK_GRAFT_BCAST_FRONTIER_ROWS", "200000")
+    return _closed(
+        roots.consolidate_final().filter(F.col(DIFF) > 0),
+        expand,
+        FactKind(roots.payload_columns),
+        max_iters,
     )
-    BIG_TOTAL = 500_000  # broadcast tail only pays off against a big total
-    for _round in range(max_iters):
-        _t0 = _time.time()
-        frontier_coll = DiffCollection.from_df(frontier)
-        # The candidate set is checkpointed BEFORE the anti-join so the
-        # anti-join plan references each checkpoint RDD exactly once —
-        # `frontier` is both the expand input and one of the parts, and a
-        # plan holding the same LogicalRDD twice trips Spark's
-        # localCheckpoint stats rewrite ("key not found: <attr>").
-        cand = _ckpt(expand(frontier_coll).df.select(*key).distinct())
-        total = parts[0]
-        for p in parts[1:]:
-            total = total.unionAll(p)
-        if (
-            n_frontier is not None
-            and n_frontier <= SMALL_FRONTIER
-            and total_count >= BIG_TOTAL
-        ):
-            # Small-frontier tail: the plain anti-join would exchange (or
-            # broadcast-build) the ENTIRE accumulated total every round even
-            # for a 1-fact frontier. Instead broadcast the small candidate
-            # set against the parts (one map-side scan, no exchange) to find
-            # the already-known keys, then anti-join the candidates against
-            # that (small) matched set. `matched` is checkpointed so the
-            # final plan references `cand`'s RDD only once.
-            matched = _ckpt(
-                total.join(F.broadcast(cand), key, "left_semi")
-            )
-            # Checkpoint fused with the convergence probe: one job instead
-            # of an eager checkpoint followed by a separate count.
-            new, n_new = counted_local_checkpoint(
-                cand.join(F.broadcast(matched), key, "left_anti")
-            )
-            _release(matched)
-        else:
-            new, n_new = counted_local_checkpoint(
-                cand.join(total, key, "left_anti")
-            )
-        n_frontier = n_new
-        total_count += n_new
-        _release(cand)
-        if _debug:
-            print(
-                f"semi_naive round {_round}: {_time.time() - _t0:.2f}s "
-                f"new={n_new}",
-                flush=True,
-            )
-        if n_new == 0:
-            _release(new)
-            out = parts[0]
-            for p in parts[1:]:
-                out = out.unionAll(p)
-            # Carry every part's storage handle so release_checkpoint on the
-            # result frees the whole closed set.
-            out._ckpt_rdds = [h for p in parts for h in getattr(p, "_ckpt_rdds", ())]
-            return DiffCollection.from_df(out)
-        parts.append(new)
-        frontier = new
-    raise FixpointNotReached(f"no fixed point within {max_iters} iterations")
-
-
-def _semi_naive_broadcast(
-    base: DataFrame, expand: Logic, key: list, max_iters: int, debug: bool
-) -> DiffCollection:
-    """Broadcast-total variant: right when the closed set stays small enough
-    to hash into one relation (the per-round build is serial — see
-    semi_naive's docstring)."""
-    import time as _time
-
-    total = _ckpt(base)
-    frontier = total
-    for _round in range(max_iters):
-        _t0 = _time.time()
-        frontier_coll = DiffCollection.from_df(frontier)
-        cand = expand(frontier_coll).df.select(*key)
-        new, n_new = counted_local_checkpoint(
-            cand.join(F.broadcast(total), key, "left_anti").distinct()
-        )
-        if debug:
-            print(f"semi_naive round {_round}: {_time.time() - _t0:.2f}s", flush=True)
-        if n_new == 0:
-            _release(new)
-            if frontier is not total:
-                _release(frontier)
-            return DiffCollection.from_df(total)
-        prev_total, prev_frontier = total, frontier
-        total = _ckpt(total.unionAll(new))
-        _release(prev_total)
-        if prev_frontier is not prev_total:
-            _release(prev_frontier)
-        frontier = new
-    raise FixpointNotReached(f"no fixed point within {max_iters} iterations")
 
 
 def iterate_keyed_min(
@@ -263,52 +348,15 @@ def iterate_keyed_min(
     """Fixpoint of "keep the per-key minimum" — BFS distance labeling
     (src/algorithms/graphs/bfs.rs:36-49: ``inner.join(edges).concat(nodes)
     .reduce(min)``), run delta-style: each round expands only keys whose
-    minimum improved.
+    minimum improved (:func:`closure` over min-valued facts; the result is
+    the per-key minimum over the rounds' parts).
 
     ``expand`` maps the frontier (keys + current best value) to candidate
     (key, value) facts; a candidate survives iff it beats the current best.
     """
-    keys = list(keys)
-    best = _ckpt(
-        initial.df.groupBy(*keys).agg(F.min(value).alias(value))
+    return _closed(
+        initial.df, expand, FactKind([*keys, value], min_col=value), max_iters
     )
-    frontier = best
-    for _ in range(max_iters):
-        frontier_coll = DiffCollection.from_df(frontier)
-        cand = (
-            expand(frontier_coll)
-            .df.groupBy(*keys)
-            .agg(F.min(value).alias("__cand"))
-        )
-        cur = best.select(*keys, F.col(value).alias("__cur"))
-        # Checkpoint + emptiness probe in ONE job (these loops are driver-
-        # round-floor bound; the separate isEmpty() was ~a third of a round).
-        improved, n_improved = counted_local_checkpoint(
-            cand.join(cur, keys, "left")
-            .filter(F.col("__cur").isNull() | (F.col("__cand") < F.col("__cur")))
-            .select(*keys, F.col("__cand").alias(value))
-        )
-        if n_improved == 0:
-            _release(improved)
-            if frontier is not best:
-                _release(frontier)
-            return DiffCollection.from_df(best)
-        prev_best, prev_frontier = best, frontier
-        # Merge as union + per-key min rather than anti-join + union: the
-        # latter references the `improved` LogicalRDD twice in one plan,
-        # which trips a Spark localCheckpoint stats-rewrite bug ("key not
-        # found: <attr>") after attribute deduplication. `improved` holds
-        # only strictly-better values, so the per-key min IS the new best.
-        best = _ckpt(
-            prev_best.unionByName(improved)
-            .groupBy(*keys)
-            .agg(F.min(value).alias(value))
-        )
-        _release(prev_best)
-        if prev_frontier is not prev_best:
-            _release(prev_frontier)
-        frontier = improved
-    raise FixpointNotReached(f"no fixed point within {max_iters} iterations")
 
 
 def iterate_with_priorities(
@@ -341,21 +389,21 @@ def iterate_with_priorities(
     def stage_at(r: int) -> DiffCollection:
         return staged.filter(F.col(round_col) == r).map(*payload)
 
-    current = _ckpt(stage_at(0).consolidate().df)
+    current = tracked_local_checkpoint(stage_at(0).consolidate().df)
     for r in range(1, int(max_round) + 1):
-        nxt = _ckpt(
+        nxt = tracked_local_checkpoint(
             logic(DiffCollection(current))
             .concat(stage_at(r))
             .consolidate()
             .df
         )
-        _release(current)
+        release_checkpoint(current)
         current = nxt
     # Every record has entered; run the ordinary fixpoint to convergence.
     out = iterate(
         DiffCollection(current), logic, max_iters=max_iters, strict=strict
     )
-    _release(current)
+    release_checkpoint(current)
     return out
 
 
@@ -376,71 +424,46 @@ def mutual_semi_naive(
     ``name``. Monotone, distinct-valued logic only (the semi_naive
     contract). Each relation keeps its closed set as a list of disjoint
     checkpointed frontier parts exactly like :func:`semi_naive`; a round
-    costs, per relation, one candidate checkpoint + one anti-join + one
-    count, all O(new).
+    runs one driver round (:func:`advance`) per relation, O(new) each.
 
     Returns ``{name: closed-set DiffCollection}``.
     """
     names = list(roots)
-    keys = {n: roots[n].payload_columns for n in names}
-    parts: dict[str, list[DataFrame]] = {}
-    frontiers: dict[str, DiffCollection] = {}
-    for n in names:
-        base = (
-            roots[n].consolidate_final().filter(F.col(DIFF) > 0).select(*keys[n])
+    spark = roots[names[0]].df.sparkSession
+    kinds = {n: FactKind(roots[n].payload_columns) for n in names}
+    scratch = Scratch()
+    fronts = {
+        n: scratch.ckn(
+            kinds[n].merge(roots[n].consolidate_final().filter(F.col(DIFF) > 0))
         )
-        parts[n] = [_ckpt(base)]
-        frontiers[n] = DiffCollection.from_df(parts[n][0])
+        for n in names
+    }
+    parts = {n: [fronts[n][0]] for n in names}
+    n_known = {n: fronts[n][1] for n in names}
 
-    def union_of(ps):
-        out = ps[0]
-        for p in ps[1:]:
-            out = out.unionAll(p)
-        return out
-
-    from concurrent.futures import ThreadPoolExecutor
-
-    def _advance(n, frontiers, totals):
-        # Checkpoint candidates before the anti-join: a plan holding the
-        # same checkpoint RDD twice (a frontier that is also a part)
-        # trips Spark's localCheckpoint stats rewrite.
-        cand = _ckpt(
-            expands[n](frontiers, totals).df.select(*keys[n]).distinct()
+    def _round(n, frontiers, totals):
+        cands = kinds[n].merge(expands[n](frontiers, totals).df)
+        return advance(
+            cands, parts[n], kinds[n], scratch, fronts[n][1], n_known[n], True
         )
-        # Checkpoint fused with the per-relation convergence count: one job.
-        new, n_new = counted_local_checkpoint(
-            cand.join(totals[n], keys[n], "left_anti")
-        )
-        _release(cand)
-        return n, new, n_new
 
-    for _round in range(max_iters):
-        totals = {n: union_of(parts[n]) for n in names}
-        new_parts: dict[str, DataFrame] = {}
-        any_new = False
+    for _ in range(max_iters):
+        frontiers = {n: DiffCollection.from_df(gate(*fronts[n])) for n in names}
+        totals = {n: _union(parts[n]) for n in names}
         # The relations' rounds are independent given the previous frontiers:
         # run them as concurrent Spark jobs (the reference runs all Variables
-        # in one dataflow graph; driver threads are the Spark analogue).
+        # in one dataflow graph; driver threads are the Spark analogue). The
+        # threads inherit the caller's job group.
         with ThreadPoolExecutor(max_workers=max(len(names), 1)) as ex:
-            results = list(
-                ex.map(lambda n: _advance(n, frontiers, totals), names)
+            run = inheritable_thread_target(spark)(
+                lambda n: _round(n, frontiers, totals)
             )
-        for n, new, n_new in results:
-            if n_new > 0:
-                any_new = True
-            new_parts[n] = new
-        if not any_new:
-            for n in names:
-                _release(new_parts[n])
-            out: dict[str, DiffCollection] = {}
-            for n in names:
-                closed = union_of(parts[n])
-                closed._ckpt_rdds = [
-                    h for p in parts[n] for h in getattr(p, "_ckpt_rdds", ())
-                ]
-                out[n] = DiffCollection.from_df(closed)
-            return out
-        for n in names:
-            parts[n].append(new_parts[n])
-            frontiers[n] = DiffCollection.from_df(new_parts[n])
+            fronts = dict(zip(names, ex.map(run, names)))
+        if not any(cnt for _, cnt in fronts.values()):
+            scratch.reap(keep=[p for n in names for p in parts[n]])
+            return {n: _collection(parts[n], kinds[n]) for n in names}
+        for n, (new, cnt) in fronts.items():
+            if cnt:
+                parts[n].append(new)
+                n_known[n] += cnt
     raise FixpointNotReached(f"no mutual fixed point within {max_iters} iterations")

@@ -23,6 +23,18 @@ from pyspark.sql import SparkSession
 _ckpt_lock = threading.Lock()
 
 
+def driver_memory() -> str:
+    """``spark.driver.memory``: ``$SPARK_DRIVER_MEMORY`` when set, else half
+    of physical memory (at least 1 GiB). A local-mode driver JVM holds the
+    executors too, so a heap above physical memory lets it grow until the
+    kernel kills it."""
+    env = os.environ.get("SPARK_DRIVER_MEMORY")
+    if env:
+        return env
+    total_gib = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES") / 2**30
+    return f"{max(1, int(total_gib // 2))}g"
+
+
 def get_spark(
     app_name: str = "differential_dataflow_spark",
     cores: int | None = None,
@@ -72,7 +84,7 @@ def get_spark(
         .config("spark.sql.session.timeZone", "UTC")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.execution.arrow.maxRecordsPerBatch", "65536")
-        .config("spark.driver.memory", os.environ.get("SPARK_DRIVER_MEMORY", "48g"))
+        .config("spark.driver.memory", driver_memory())
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         # Whole-stage-codegen class cache (default 100 entries): a session

@@ -67,9 +67,12 @@ diff)`` part, and a batch returns the consolidation of the parts it sealed.
 
 Scale shape: inputs and the derived set live in arrangements
 (operators/arrange.py; inputs optionally durable and key-bucketed, so
-per-batch reads prune to touched buckets); suspect/frontier sets are small
-and broadcast into the joins; every loop round is ONE counted-checkpoint
-job (materialization fused with the convergence probe). The one inherently
+per-batch reads prune to touched buckets). Every loop — the insert
+expansion and the overdelete and rederive closures — runs on the engine's
+one semi-naive round driver (operators/iterate.py::closure): a frontier
+under its gate is broadcast into the step's joins, and every round is ONE
+counted checkpoint (materialization fused with the convergence probe; the
+expansion's is the seal into the derived trace). The one inherently
 program-shaped cost is the rederive boundary seed (``step`` over the kept
 region): the default scans it once per deletion batch; programs with a
 cheaper reverse-key form (like IncrementalReachability's dst-keyed
@@ -87,6 +90,7 @@ from pyspark.sql import functions as F
 
 from differential_dataflow_spark.collection import DIFF
 from differential_dataflow_spark.operators.arrange import Arrangement
+from differential_dataflow_spark.operators.iterate import FactKind, closure
 from differential_dataflow_spark.session import (
     Scratch,
     micro_batch_scope,
@@ -96,18 +100,6 @@ from differential_dataflow_spark.session import (
 Inputs = Mapping[str, DataFrame]
 Step = Callable[[DataFrame, Inputs], DataFrame]
 Axioms = Callable[[Inputs], DataFrame]
-
-
-# Row gate for broadcasting a loop frontier into the step's joins (the
-# same gate as ``semi_naive``'s default): under it the input relations
-# stream map-side instead of being broadcast or exchanged every round.
-BROADCAST_FRONTIER_ROWS = 200_000
-
-
-def _small(frontier: DataFrame, n_rows: int) -> DataFrame:
-    if n_rows <= BROADCAST_FRONTIER_ROWS:
-        return F.broadcast(frontier)
-    return frontier
 
 
 def _union(dfs: list[DataFrame]) -> DataFrame:
@@ -182,8 +174,7 @@ class MaintainedFixpoint:
         during rederivation."""
         self.spark = spark
         self.fact_cols = list(fact_cols)
-        self.min_col = min_col
-        self.key_cols = [c for c in self.fact_cols if c != min_col]
+        self.kind = FactKind(fact_cols, min_col)
         self.axioms = axioms
         self.step = step
         self.rederive_seeds = rederive_seeds
@@ -216,7 +207,7 @@ class MaintainedFixpoint:
         # Which inputs the axioms read: a batch that changes none of them
         # leaves the axioms as they were, and skips the axiom diffs.
         reads = _Reads(supports)
-        base_axioms = self._merge(axioms(reads))
+        base_axioms = self.kind.merge(axioms(reads))
         self._axiom_inputs = reads.read
         # Whether the step reads the derived relation itself (non-linear).
         reads = _Reads({**supports, "$derived": base_axioms})
@@ -306,86 +297,30 @@ class MaintainedFixpoint:
         out["$derived"] = derived
         return out
 
-    # -- facts: distinct-valued or min-valued ------------------------------ #
-
-    def _merge(self, cands: DataFrame) -> DataFrame:
-        """One fact per distinct candidate, or per key at its least value."""
-        cands = cands.select(*self.fact_cols)
-        if self.min_col is None:
-            return cands.distinct()
-        out = cands.groupBy(*self.key_cols).agg(
-            F.min(self.min_col).alias(self.min_col)
-        )
-        if out.columns != self.fact_cols:
-            out = out.select(*self.fact_cols)
-        return out
-
-    def _by_key(
-        self, cands: DataFrame, other: DataFrame, value_test, how: str
-    ) -> DataFrame:
-        """Min-valued facts only: join ``cands`` against ``other`` on the
-        key, with ``value_test(cand value, other value)`` as the extra
-        condition. ``other`` is a small (broadcast) fact set."""
-        o = {c: f"__o_{c}" for c in self.fact_cols}
-        other = F.broadcast(
-            other.select(*(F.col(c).alias(a) for c, a in o.items()))
-        )
-        cond = [F.col(k) == F.col(o[k]) for k in self.key_cols]
-        cond.append(value_test(F.col(self.min_col), F.col(o[self.min_col])))
-        return cands.join(other, reduce(lambda a, b: a & b, cond), how)
-
-    def _fresh(self, cands: DataFrame, seen: DataFrame) -> DataFrame:
-        """Candidates ``seen`` does not already cover: absent facts, or
-        (min-valued) keys absent from ``seen`` or at a lower value."""
-        if self.min_col is None:
-            return cands.join(seen, self.fact_cols, "left_anti")
-        return self._by_key(cands, seen, lambda v, s: s <= v, "left_anti")
+    # -- facts: distinct-valued or min-valued (FactKind) ------------------ #
 
     def _within_suspect(
         self, cands: DataFrame, suspect: DataFrame
     ) -> DataFrame:
         """The rederive bound: candidates for suspect facts, or (min-valued)
         for suspect keys at no lower a value than the key's old one."""
-        if self.min_col is None:
+        if self.kind.min_col is None:
             return cands.join(F.broadcast(suspect), self.fact_cols, "left_semi")
-        return self._by_key(cands, suspect, lambda v, s: v >= s, "left_semi")
-
-    def _improve(self, cands: DataFrame, current: DataFrame) -> DataFrame:
-        """The part that adds merged ``cands`` to the ``current`` facts:
-        +1 per fresh fact and, for an improved min-valued key, −1 for the
-        value it held (``current`` holds one fact per key)."""
-        one = F.lit(1).cast("long").alias(DIFF)
-        if self.min_col is None:
-            return self._fresh(cands, current).select(*self.fact_cols, one)
-        v = self.min_col
-        old = current.select(*self.key_cols, F.col(v).alias("__old"))
-        better = cands.join(old, self.key_cols, "left").filter(
-            F.col("__old").isNull() | (F.col(v) < F.col("__old"))
+        return self.kind.by_key(
+            cands, F.broadcast(suspect), lambda v, s: v >= s, "left_semi"
         )
-        minus_one = F.lit(-1).cast("long").alias(DIFF)
-        pair = F.array(
-            F.struct(F.col(v).alias(v), one),
-            F.struct(F.col("__old").alias(v), minus_one),
-        )
-        rows = better.select(
-            *self.key_cols,
-            F.inline(F.filter(pair, lambda r: r[v].isNotNull())),
-        )
-        if rows.columns != [*self.fact_cols, DIFF]:
-            rows = rows.select(*self.fact_cols, DIFF)
-        return rows
 
     def _replace(self, suspect: DataFrame, rederived: DataFrame) -> DataFrame:
         """The part taking the suspect facts to the rederived ones: −1 per
         suspect fact not rederived at its value and, for min-valued facts,
         +1 per key rederived at a new value (distinct-valued rederivation
         stays inside the suspect set)."""
-        if self.min_col is not None:
-            rederived = self._merge(rederived)
+        if self.kind.min_col is not None:
+            rederived = self.kind.merge(rederived)
         out = suspect.join(rederived, self.fact_cols, "left_anti").select(
             *self.fact_cols, F.lit(-1).cast("long").alias(DIFF)
         )
-        if self.min_col is None:
+        if self.kind.min_col is None:
             return out
         return out.unionByName(
             rederived.join(suspect, self.fact_cols, "left_anti").select(
@@ -393,7 +328,7 @@ class MaintainedFixpoint:
             )
         )
 
-    # -- semi-naive loops -------------------------------------------------- #
+    # -- semi-naive loops (operators/iterate.py::closure) ----------------- #
 
     def _expand(
         self, frontier: DataFrame, n_frontier: int, supports: Inputs
@@ -401,20 +336,24 @@ class MaintainedFixpoint:
         """Ordinary semi-naive expansion: derive from ``frontier`` until no
         new facts; each round's changes are sealed into the derived trace.
         One checkpoint job per round (:meth:`_seal`)."""
-        for _ in range(self.max_iters):
-            if n_frontier == 0:
-                return
+
+        def step(f: DataFrame) -> DataFrame:
             # Non-linear steps see ALL facts so far (semi-naive "full"
             # relation) — rebound every round as parts accumulate.
-            current = self._derived_support()
-            sup = self._bind(supports, current)
-            frontier, n_frontier = self._seal(
-                self._improve(
-                    self._merge(self.step(_small(frontier, n_frontier), sup)),
-                    current,
-                )
-            )
-        raise RuntimeError("fixpoint expansion did not converge")
+            return self.step(f, self._bind(supports, self._derived_support()))
+
+        closure(
+            frontier,
+            n_frontier,
+            step,
+            self.kind,
+            [],
+            self._scratch,
+            seal=lambda c: self._seal(
+                self.kind.improve(c, self._derived_support())
+            ),
+            max_iters=self.max_iters,
+        )
 
     def _closure_within(
         self,
@@ -433,24 +372,27 @@ class MaintainedFixpoint:
         ``dyn_derived ∪ closure-so-far``, rebound each round — rederiving
         through a still-suspect fact would keep facts alive via dead
         derivations, so only kept-plus-already-rederived facts qualify."""
-        acc, frontier, n_front = seeds, seeds, n_seeds
-        for _ in range(self.max_iters):
-            if n_front == 0:
-                return acc
-            seen = acc if exclude is None else acc.unionByName(exclude)
-            sup = (
-                self._bind(supports, dyn_derived.unionByName(acc))
-                if dyn_derived is not None
-                else supports
+        acc = [seeds]
+
+        def step(f: DataFrame) -> DataFrame:
+            if dyn_derived is None:
+                return self.step(f, supports)
+            return self.step(
+                f, self._bind(supports, _union([dyn_derived, *acc]))
             )
-            cands = self.step(_small(frontier, n_front), sup)
-            frontier, n_front = self._scratch.ckn(
-                self._fresh(
-                    self._merge(within(cands.select(*self.fact_cols))), seen
-                )
-            )
-            acc = acc.unionByName(frontier)
-        raise RuntimeError("closure did not converge")
+
+        closure(
+            seeds,
+            n_seeds,
+            step,
+            self.kind,
+            acc,
+            self._scratch,
+            within=within,
+            exclude=exclude,
+            max_iters=self.max_iters,
+        )
+        return _union(acc)
 
     # -- maintenance -------------------------------------------------------- #
 
@@ -524,12 +466,12 @@ class MaintainedFixpoint:
         new_supports = self._fold(
             self._supports(), {n: n in dels for n in self.inputs}
         )
-        ax_old = self._merge(self.axioms(old_supports))
+        ax_old = self.kind.merge(self.axioms(old_supports))
         ax_del = any(name in dels for name in self._axiom_inputs)
         ax_ins = any(name in inss for name in self._axiom_inputs)
         ax_new = ax_old
         if ax_del or ax_ins:
-            ax_new = self._scratch.ck(self._merge(self.axioms(new_supports)))
+            ax_new = self._scratch.ck(self.kind.merge(self.axioms(new_supports)))
 
         # Phase 1: OVERDELETE — suspect seeds from retracted axioms and from
         # derivations through each input's deleted rows. Skipped outright on
@@ -553,7 +495,9 @@ class MaintainedFixpoint:
                 return cands.join(derived_old, self.fact_cols, "left_semi")
 
             seeds, n_seeds = self._scratch.ckn(
-                self._fresh(self._merge(in_derived(_union(seed_parts))), ax_new)
+                self.kind.fresh(
+                    self.kind.merge(in_derived(_union(seed_parts))), ax_new
+                )
             )
             if n_seeds:
                 suspect = self._closure_within(
@@ -572,7 +516,7 @@ class MaintainedFixpoint:
                     lambda kept, sus, sup: self.step(kept, sup)
                 )
                 r0, n_r0 = self._scratch.ckn(
-                    self._merge(
+                    self.kind.merge(
                         self._within_suspect(
                             boundary_fn(
                                 kept, suspect, self._bind(new_supports, kept)
@@ -595,7 +539,7 @@ class MaintainedFixpoint:
         # delete-only batches.
         if inss:
             derived_now = self._derived_support()
-            ins_parts = [self._fresh(ax_new, ax_old)] if ax_ins else []
+            ins_parts = [self.kind.fresh(ax_new, ax_old)] if ax_ins else []
             for name, ins_df in inss.items():
                 restricted = dict(self._bind(new_supports, derived_now))
                 restricted[name] = F.broadcast(ins_df)
@@ -603,7 +547,9 @@ class MaintainedFixpoint:
                     self.step(derived_now, restricted).select(*self.fact_cols)
                 )
             frontier, n_ins = self._seal(
-                self._improve(self._merge(_union(ins_parts)), derived_now)
+                self.kind.improve(
+                    self.kind.merge(_union(ins_parts)), derived_now
+                )
             )
             self._expand(frontier, n_ins, new_supports)
 

@@ -36,12 +36,15 @@ from pyspark.sql import functions as F
 
 from differential_dataflow_spark.collection import DIFF
 from differential_dataflow_spark.operators.arrange import Arrangement
+from differential_dataflow_spark.operators.iterate import FactKind, closure
 from differential_dataflow_spark.session import (
     Scratch,
     micro_batch_scope,
     tracked_local_checkpoint,
 )
 from differential_dataflow_spark.streaming.fixpoint import MaintainedFixpoint
+
+_NODES = FactKind(["node"])
 
 
 def _out_edges(tails: DataFrame, edges: DataFrame) -> DataFrame:
@@ -392,10 +395,12 @@ class KCoreMaintainer:
     - GROW: candidate closure from the inserted edges' endpoints over
       NON-core nodes with total live degree >= k (any node that newly joins
       the core chains to an inserted edge through such nodes — including
-      shrink-phase casualties resurrected by fresh joiners), then an inner
-      peel of the candidates with the surviving core held fixed; survivors
-      join. Deletion-only batches skip GROW entirely (the core can only
-      shrink), insertion-only batches skip SHRINK.
+      shrink-phase casualties resurrected by fresh joiners) — a distinct
+      closure on the loop driver (operators/iterate.py::closure, step =
+      neighbours, within = eligible) — then an inner peel of the candidates
+      with the surviving core held fixed; survivors join. Deletion-only
+      batches skip GROW entirely (the core can only shrink), insertion-only
+      batches skip SHRINK.
 
     Emits the membership update stream ``(node, diff)``; ``core_nodes`` /
     ``core_edges`` expose the maintained state (edges in canonical
@@ -619,9 +624,9 @@ class KCoreMaintainer:
         if ins is not None:
             # GROW: candidate closure from inserted endpoints over non-core
             # nodes with total degree >= k, then peel with `core` fixed.
-            # Each closure round is ONE counted-checkpoint job (the next
-            # eligible ring's materialization doubles as the convergence
-            # probe) — the eligibility joins stay lazy inside that job.
+            # A distinct closure on the loop driver (step = neighbours,
+            # within = eligible): one counted checkpoint per round, the
+            # eligibility joins lazy inside it.
             def eligible(nodes: DataFrame) -> DataFrame:
                 cand = nodes.join(core, ["node"], "left_anti")
                 deg = self._degrees_within(cand, members=None)  # total degree
@@ -640,29 +645,23 @@ class KCoreMaintainer:
                 )
             )
             if n_seeds:
-                cand_parts = [seeds]
-                frontier = seeds
-                for _ in range(self.max_iters):
-                    acc = cand_parts[0]
-                    for p in cand_parts[1:]:
-                        acc = acc.unionByName(p)
-                    nxt, n_nxt = self._scratch.ckn(
-                        eligible(
-                            self._support_from(
-                                frontier.select(F.col("node").alias("src"))
-                            )
-                            .select(F.col("dst").alias("node"))
-                            .distinct()
-                        ).join(acc, ["node"], "left_anti")
+                grown = [seeds]
+                closure(
+                    seeds,
+                    n_seeds,
+                    lambda f: self._support_from(
+                        f.select(F.col("node").alias("src"))
                     )
-                    if n_nxt == 0:
-                        break
-                    cand_parts.append(nxt)
-                    frontier = nxt
-                else:
-                    raise RuntimeError("k-core grow closure did not converge")
-                cands = cand_parts[0]
-                for p in cand_parts[1:]:
+                    .select(F.col("dst").alias("node"))
+                    .distinct(),
+                    _NODES,
+                    grown,
+                    self._scratch,
+                    within=eligible,
+                    max_iters=self.max_iters,
+                )
+                cands = grown[0]
+                for p in grown[1:]:
                     cands = cands.unionByName(p)
                 joined = self._peel(cands, fixed=core)
                 core = self._scratch.ck(core.unionByName(joined))

@@ -48,7 +48,20 @@ def main() -> int:
     if unknown:
         print(f"unknown queries: {' '.join(unknown)}", file=sys.stderr)
         return 2
-    spark = get_spark(app_name="check-oracles", cores=8, shuffle_partitions=8)
+    spark = get_spark(
+        app_name="check-oracles",
+        cores=8,
+        shuffle_partitions=8,
+        # Job counts read the status tracker, which must keep every job.
+        extra_conf={"spark.ui.retainedJobs": "100000"},
+    )
+    sc = spark.sparkContext
+    tracker = sc._jsc.statusTracker()
+
+    def jobs(group: str) -> int:
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(tracker.getJobIdsForGroup(group))
+
     con = duckdb.connect()
     for t in TABLES:
         con.sql(
@@ -60,6 +73,9 @@ def main() -> int:
         if only and name not in only:
             continue
         ran += 1
+        group = f"check-oracles-{name}"
+        sc.setJobGroup(group, name)
+        n0 = jobs(group)
         t0 = time.time()
         try:
             got = fn(spark, sf_dir).toPandas()
@@ -67,9 +83,12 @@ def main() -> int:
             print(f"FAIL {name}: spark error: {e}")
             failures.append(name)
             continue
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+        cost = f"[{time.time() - t0:.1f}s, {jobs(group) - n0} jobs]"
         if name not in ORACLES:
             print(f"ok?  {name}: rows={len(got)} (no oracle — rows-only check) "
-                  f"[{time.time()-t0:.1f}s]")
+                  f"{cost}")
             continue
         try:
             want = con.sql(ORACLES[name]).df()
@@ -93,7 +112,7 @@ def main() -> int:
             print("  want:", w[neq].head(3).to_dict("records"))
             failures.append(name)
             continue
-        print(f"PASS {name}: rows={len(g)} [{time.time()-t0:.1f}s]")
+        print(f"PASS {name}: rows={len(g)} {cost}")
     print(f"\n{ran - len(failures)}/{ran} queries pass")
     return 1 if failures else 0
 

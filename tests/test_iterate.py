@@ -4,9 +4,13 @@ recomputation)."""
 
 from __future__ import annotations
 
+import uuid
+
+import pytest
 from pyspark.sql import functions as F
 
 from differential_dataflow_spark import DiffCollection
+from differential_dataflow_spark.operators import iterate as loop
 from differential_dataflow_spark.operators.iterate import (
     iterate,
     iterate_keyed_min,
@@ -188,3 +192,166 @@ def test_mutual_semi_naive_even_odd(spark):
         for r in closed[tag].df.collect()
     }
     assert got == want
+
+
+# -- the loop driver: both sides of the frontier gate, and round shapes ---- #
+
+
+def _reach(spark, pairs, root=0):
+    edges = _edges(spark, pairs)
+    roots = DiffCollection.from_updates(spark, [(root, 0, 1)], "node bigint")
+    return semi_naive(
+        roots,
+        lambda f: f.map(src=F.col("node"))
+        .join(edges.map(F.col("src"), node=F.col("dst")), on=["src"])
+        .map(F.col("node")),
+    )
+
+
+def _bfs(spark, pairs, root=0):
+    edges = _edges(spark, pairs)
+    init = DiffCollection.from_updates(
+        spark, [(root, 0, 0, 1)], "node bigint, dist bigint"
+    )
+    return iterate_keyed_min(
+        init,
+        lambda f: f.map(src=F.col("node"), d=F.col("dist"))
+        .join(edges.map(F.col("src"), node=F.col("dst")), on=["src"])
+        .map(F.col("node"), dist=F.col("d") + 1),
+        keys=["node"],
+        value="dist",
+    )
+
+
+_GRAPH = [(0, 1), (1, 2), (2, 3), (3, 1), (1, 4), (4, 5), (5, 6), (0, 6), (7, 8)]
+
+
+def _driver_results(spark) -> dict:
+    """One result per driver caller: semi_naive, iterate_keyed_min, a
+    distinct- and a min-valued MaintainedFixpoint through a mixed batch
+    (expansion, overdelete and rederive closures), and KCoreMaintainer
+    through an insert batch (the GROW closure)."""
+    from differential_dataflow_spark.streaming.maintain import (
+        IncrementalBFS,
+        IncrementalReachability,
+        KCoreMaintainer,
+    )
+
+    def frame(pairs):
+        return spark.createDataFrame(pairs, "src long, dst long")
+
+    out = {
+        "semi_naive": sorted(r.node for r in _reach(spark, _GRAPH).df.collect()),
+        "keyed_min": sorted(
+            (r.node, r.dist) for r in _bfs(spark, _GRAPH).df.collect()
+        ),
+    }
+    ir = IncrementalReachability(
+        spark, frame(_GRAPH), spark.createDataFrame([(0,)], "node long")
+    )
+    upd = spark.createDataFrame(
+        [(1, 2, -1), (3, 1, -1), (8, 9, 1), (6, 7, 1)],
+        "src long, dst long, diff long",
+    )
+    out["reach_batch"] = sorted(tuple(r) for r in ir.process_batch(upd).collect())
+    out["reach"] = sorted(r.node for r in ir.reached_nodes().collect())
+    ir.release()
+    ib = IncrementalBFS(spark, frame(_GRAPH), root=0)
+    batch = ib.process_batch(frame([(6, 7), (0, 5)]), frame([(0, 1), (4, 5)]))
+    out["bfs_batch"] = sorted(tuple(r) for r in batch.collect())
+    out["bfs"] = sorted(tuple(r) for r in ib.distances().collect())
+    ib.release()
+    km = KCoreMaintainer(spark, frame([(0, 1), (1, 2), (2, 0), (3, 4)]), k=2)
+    batch = km.process_batch(frame([(2, 3), (4, 5), (5, 2), (6, 7)]), None)
+    out["kcore_batch"] = sorted(tuple(r) for r in batch.collect())
+    out["kcore"] = sorted(r.node for r in km.core_nodes().collect())
+    km.release()
+    return out
+
+
+@pytest.fixture(scope="module")
+def default_results(spark) -> dict:
+    return _driver_results(spark)
+
+
+@pytest.mark.parametrize(
+    "patch",
+    [
+        # Gate at 0: no non-empty frontier is under it, so none is
+        # broadcast and every round anti-joins against the exchanged parts.
+        {"FRONTIER_ROWS": 0},
+        # Tail threshold at 0: every frontier under the gate takes the
+        # broadcast tail (candidates broadcast against the parts).
+        {"TAIL_KNOWN_ROWS": 0},
+    ],
+    ids=["exchange", "tail"],
+)
+def test_frontier_gate_sides_agree(spark, monkeypatch, default_results, patch):
+    assert default_results["semi_naive"] == _python_reach(_GRAPH, [0])
+    for name, value in patch.items():
+        monkeypatch.setattr(loop, name, value)
+    assert _driver_results(spark) == default_results
+
+
+def _jobs(spark, fn) -> int:
+    """Spark jobs ``fn`` launches: the diff of its own job group's jobs."""
+    sc = spark.sparkContext
+    tracker = sc._jsc.statusTracker()
+    group = f"loop-jobs-{uuid.uuid4().hex[:8]}"
+    sc.setJobGroup(group, "loop driver job count")
+    try:
+        before = len(tracker.getJobIdsForGroup(group))
+        fn()
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(tracker.getJobIdsForGroup(group)) - before
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _chain(n):
+    return [(i, i + 1) for i in range(n - 1)]
+
+
+# Per-round Spark jobs before the loop driver, measured on these chains by
+# the same job-group diff (AQE stage jobs included): semi_naive 10 (two
+# actions: candidate checkpoint + counted anti-join), iterate_keyed_min 10
+# (counted improvement + rewritten best), a MaintainedFixpoint insert
+# expansion 6 (one counted seal). A round may not cost more.
+@pytest.mark.parametrize(
+    "run, per_round",
+    [
+        (lambda spark, n: _reach(spark, _chain(n)), 10),
+        (lambda spark, n: _bfs(spark, _chain(n)), 10),
+    ],
+    ids=["semi_naive", "iterate_keyed_min"],
+)
+def test_loop_rounds_keep_their_job_count(spark, run, per_round):
+    # An n-node chain from node 0 closes in n rounds (the last one empty),
+    # so the job difference between two chain lengths is the per-round cost.
+    short = _jobs(spark, lambda: run(spark, 3))
+    long = _jobs(spark, lambda: run(spark, 7))
+    assert long - short <= per_round * 4
+
+
+def test_maintained_fixpoint_expansion_keeps_its_job_count(spark):
+    from differential_dataflow_spark.streaming.maintain import (
+        IncrementalReachability,
+    )
+
+    def insert_chain(n):
+        ir = IncrementalReachability(
+            spark,
+            spark.createDataFrame([(0, 1)], "src long, dst long"),
+            spark.createDataFrame([(0,)], "node long"),
+        )
+        edges = spark.createDataFrame(
+            [(i, i + 1) for i in range(1, n)], "src long, dst long"
+        )
+        jobs = _jobs(spark, lambda: ir.process_batch(edges))
+        ir.release()
+        return jobs
+
+    # The batch attaches an n-1 edge chain below node 1: its expansion runs
+    # one round per chain node, so the difference is the per-round cost.
+    assert insert_chain(7) - insert_chain(3) <= 6 * 4
