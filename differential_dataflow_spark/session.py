@@ -10,17 +10,9 @@ against external oracles.
 from __future__ import annotations
 
 import os
-import threading
 
-from pyspark.sql import SparkSession
-
-# Serializes EVERY tracked_local_checkpoint (the checkpoint call itself plus
-# the persistent-RDD-map snapshots around it): with a concurrent job that
-# persists/checkpoints (streaming foreachBatch thread, parallel driver
-# threads), an unguarded map diff can capture ANOTHER job's RDD and
-# release_checkpoint would later unpersist a live lineage-truncated RDD —
-# unrecoverable for that job.
-_ckpt_lock = threading.Lock()
+from pyspark.sql import Observation, SparkSession
+from pyspark.sql import functions as F
 
 
 def driver_memory() -> str:
@@ -159,78 +151,35 @@ class micro_batch_scope:
         return False
 
 
-def _persistent_entries(spark: SparkSession) -> list[tuple[int, object]]:
-    """(rdd_id, java_rdd) pairs currently pinned in the block manager."""
-    jmap = spark.sparkContext._jsc.sc().getPersistentRDDs()
-    out = []
-    it = jmap.iterator()
-    while it.hasNext():
-        e = it.next()
-        out.append((e._1(), e._2()))
-    return out
-
-
-def _local_checkpoint(df, eager: bool, count: bool):
-    """Shared body of the tracked checkpoints: ``localCheckpoint`` whose
-    backing RDD handle is recorded on the result as ``_ckpt_rdds``; with
-    ``count``, the checkpoint is lazy and a ``count()`` materializes it.
-    Returns ``(checkpointed_df, row_count or None)``.
-
-    The handle is resolved from the returned DataFrame's OWN plan (its
-    LogicalRDD's backing RDD) — never from a global persistent-RDD-map diff,
-    which under any concurrent persisting job could capture that job's RDD
-    and later unpersist a live lineage-truncated RDD. A map diff remains
-    only as a fallback for plan shapes without a direct handle."""
-    spark = df.sparkSession
-    # The lock wraps the ONE localCheckpoint call plus the map snapshots
-    # around it, so even when the plan-handle resolution fails the fallback
-    # diff brackets the very checkpoint that created the RDD — never a
-    # second checkpoint (which would leak the first's persisted RDD), and
-    # never a window in which another (locked) caller's checkpoint could be
-    # captured. The lock is driver-side and cheap next to the checkpoint job.
-    with _ckpt_lock:
-        before = {rid for rid, _ in _persistent_entries(spark)}
-        out = df.localCheckpoint(eager=eager and not count)
-        try:
-            out._ckpt_rdds = [out._jdf.queryExecution().analyzed().rdd()]
-        except Exception:
-            # Fallback: the map diff must bracket the materialization too
-            # (the RDD is registered at persist time, but keep the window
-            # lock-covered so no concurrent checkpoint is captured).
-            n = out.count() if count else None
-            out._ckpt_rdds = [
-                jrdd
-                for rid, jrdd in _persistent_entries(spark)
-                if rid not in before
-            ]
-            return out, n
-    # Handle already resolved from the plan: run the materializing count (a
-    # full Spark job) OUTSIDE the lock so concurrent maintenance loops only
-    # serialize on the cheap handle-resolution window, not on each other's
-    # jobs.
-    return out, (out.count() if count else None)
-
-
 def tracked_local_checkpoint(df, eager: bool = True):
-    """``localCheckpoint`` that records the newly-persisted RDD(s) on the
-    returned DataFrame so :func:`release_checkpoint` can actually free them.
+    """``localCheckpoint`` that records its backing RDD on the returned
+    DataFrame as ``_ckpt_rdds``, so :func:`release_checkpoint` can actually
+    free the blocks.
 
     ``DataFrame.unpersist()`` is a no-op for localCheckpoint blocks — they are
     RDD-level persists outside the cache manager — so fixpoint loops that
-    relied on it leaked one checkpoint RDD per round."""
-    return _local_checkpoint(df, eager, count=False)[0]
+    relied on it leaked one checkpoint RDD per round. The handle is the
+    result's OWN plan leaf (its LogicalRDD's RDD), never a diff of the
+    context's persistent-RDD map, which a concurrent checkpoint (a
+    ``foreachBatch`` thread, a background trace fold) could pollute with its
+    RDD. No lock is taken: concurrent checkpoints run their jobs side by
+    side."""
+    out = df.localCheckpoint(eager=eager)
+    out._ckpt_rdds = [out._jdf.queryExecution().analyzed().rdd()]
+    return out
 
 
 def counted_local_checkpoint(df) -> tuple:
-    """``tracked_local_checkpoint`` fused with a row count: ONE job instead
-    of two. Iterative maintenance loops (BFS relaxation, reachability
-    closure, k-core peel) pay the driver-round floor per Spark JOB, and the
-    dominant per-round pattern was eager-checkpoint (job 1) followed by
-    ``limit(1).isEmpty()`` to test convergence (job 2). Marking the
-    checkpoint LAZY and driving materialization with ``count()`` persists
-    the blocks and answers the emptiness probe in the same job, halving the
-    per-round driver floor. Returns ``(checkpointed_df, row_count)``."""
-    return _local_checkpoint(df, eager=False, count=True)
+    """An eager :func:`tracked_local_checkpoint` that also counts its rows:
+    ONE job, the checkpoint's own. The count is an ``observe`` metric
+    collected while the checkpoint materializes, so it adds no aggregate
+    (a lazy checkpoint read back by ``count()`` pays an exchange, and under
+    AQE a stage job with it). Iterative maintenance loops pay the
+    driver-round floor per Spark JOB, and the count answers their
+    convergence probe. Returns ``(checkpointed_df, row_count)``."""
+    obs = Observation()
+    out = tracked_local_checkpoint(df.observe(obs, F.count(F.lit(1)).alias("n")))
+    return out, obs.get["n"]
 
 
 class Scratch:

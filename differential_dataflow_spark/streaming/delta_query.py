@@ -17,8 +17,10 @@ Spark realization: one micro-batch epoch at a time against one shared
 ``Arrangement`` per RELATION (not per occurrence — Spark's column renaming
 plays the role of the reference's per-occurrence forward/reverse
 arrangements), so "pre/post-batch time" is simply which view a term joins
-(``R_old`` vs ``R_old ∪ ΔR``). For triangles over a single edge relation
-this yields the canonical three pipelines:
+(``R_old`` vs ``R_old ∪ ΔR``). The traces compact behind the batch: a due
+fold starts when a batch ends and is swapped in when the next begins. For
+triangles over a single edge relation the alternating discipline yields the
+canonical three pipelines:
 
     ΔT = Δ(a,b) ⋈ E_old(b,c) ⋈ E_old(a,c)
        + E_new(a,b) ⋈ Δ(b,c)  ⋈ E_old(a,c)
@@ -91,9 +93,10 @@ class DeltaQuery:
     and returns the output update stream over the query's variables plus
     ``diff``; accumulating the outputs reproduces the batch join of the
     final relation contents (pytest: 3-path over two relations, 4-clique,
-    triangle parity with the hand-wired pipelines). The returned frame is
-    valid until the next call (which may compact the traces) — the trace
-    cursor contract.
+    triangle parity with the hand-wired pipelines). The traces fold behind
+    the batch: a due fold starts when the batch ends and is swapped in when
+    the next begins. The returned frame is valid until the next call — the
+    trace cursor contract.
 
     ``state_dir`` keeps each relation's trace durable under
     ``state_dir/<relation>`` (bucketed by the relation's first column), and
@@ -212,7 +215,7 @@ class DeltaQuery:
             if r not in self.relations:
                 raise ValueError(f"delta for unknown relation {r!r}")
         for tv in self.traces.values():
-            tv.maybe_compact()
+            tv.swap()
         # Raw deltas, not consolidated: the half-joins multiply weights, so
         # duplicates and cancelling rows sum out in the output consolidation
         # and in the trace's compaction — one shuffle less per relation.
@@ -263,7 +266,7 @@ class DeltaQuery:
         if pipes:
             # Consolidate the epoch's output (one small shuffle over
             # O(|Δ|·deg) rows) and materialize it before the traces mutate
-            # (compaction frees the blocks the lazy plan references).
+            # (the next swap frees the blocks the lazy plan references).
             out = tracked_local_checkpoint(
                 reduce(DataFrame.unionByName, pipes)
                 .groupBy(*self.variables)
@@ -278,6 +281,8 @@ class DeltaQuery:
             if not all(rdd.isCheckpointed() for rdd in delta._ckpt_rdds):
                 delta.count()  # no output job read it: materialize it now
             self.traces[r].append(delta, at=self.epoch)
+        for tv in self.traces.values():
+            tv.maybe_compact()
         self.epoch += 1
         return out
 

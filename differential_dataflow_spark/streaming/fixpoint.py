@@ -67,10 +67,13 @@ diff)`` part, and a batch returns the consolidation of the parts it sealed.
 
 Scale shape: inputs and the derived set live in arrangements
 (operators/arrange.py; inputs optionally durable and key-bucketed, so
-per-batch reads prune to touched buckets). Every loop — the insert
-expansion and the overdelete and rederive closures — runs on the engine's
-one semi-naive round driver (operators/iterate.py::closure): a frontier
-under its gate is broadcast into the step's joins, and every round is ONE
+per-batch reads prune to touched buckets). Their compaction runs behind the
+batch: a batch ends by starting each due trace's fold on a worker thread,
+and the next batch begins by swapping the folds in, before it captures any
+support view. Every loop — the insert expansion and the overdelete and
+rederive closures — runs on the engine's one semi-naive round driver
+(operators/iterate.py::closure): a frontier under its gate is broadcast
+into the step's joins, and every round is ONE
 counted checkpoint (materialization fused with the convergence probe; the
 expansion's is the seal into the derived trace). The one inherently
 program-shaped cost is the rederive boundary seed (``step`` over the kept
@@ -412,19 +415,20 @@ class MaintainedFixpoint:
             return self._process_batch(updates)
 
     def _process_batch(self, updates: Mapping[str, DataFrame]) -> DataFrame:
-        self._scratch.reap()
-        self._sealed = []
-        # Compact BEFORE capturing support views: trace views are valid
-        # only until the next append/compact, and the old-support snapshots
-        # below must survive the whole batch. A compaction folds the ±1
-        # pairs to net-positive rows, so the negative-support flags reset —
-        # without this every later view pays the positive-support aggregate
-        # forever after the first deletion.
-        if self.derived.maybe_compact():
+        # Swap in the folds the last batch started BEFORE capturing support
+        # views: trace views are valid only until the next swap, and the
+        # old-support snapshots below must survive the whole batch. A fold
+        # takes the ±1 pairs to net-positive rows, so when the swap leaves
+        # no part beside it the negative-support flags reset — without this
+        # every later view pays the positive-support aggregate forever
+        # after the first deletion.
+        if self.derived.swap():
             self._derived_neg = False
         for name, tv in self.inputs.items():
-            if tv.maybe_compact():
+            if tv.swap():
                 self._input_neg[name] = False
+        self._scratch.reap()
+        self._sealed = []
 
         old_neg = dict(self._input_neg)
         old_supports = self._supports()
@@ -440,7 +444,7 @@ class MaintainedFixpoint:
             # phase-deciding aggregate as its materializer: one Spark job per
             # input delta instead of two (eager checkpoint, then a separate
             # aggregate job). The checkpoint is the sealed trace part, so the
-            # trace's compaction releases it.
+            # swap that folds it releases it.
             d = tracked_local_checkpoint(
                 upd.groupBy(*payload)
                 .agg(F.sum(DIFF).cast("long").alias(DIFF))
@@ -563,6 +567,10 @@ class MaintainedFixpoint:
             if self._sealed
             else self.derived.view().limit(0)
         )
+        # Fold behind the batch: due folds run while the caller consumes
+        # the update stream, and the next batch swaps them in.
+        for tv in (self.derived, *self.inputs.values()):
+            tv.maybe_compact()
         return (
             out.groupBy(*self.fact_cols)
             .agg(F.sum(DIFF).alias(DIFF))

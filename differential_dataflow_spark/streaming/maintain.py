@@ -6,7 +6,11 @@ batch, not the state (README.md:150-214 — 228 µs/round at batch 1, ~5 µs per
 update at batch 100k). Every maintainer here keeps its state in the one trace
 type, :class:`~differential_dataflow_spark.operators.arrange.Arrangement`:
 in memory by default, so a micro-batch round never rewrites or re-reads state
-from disk, or durable and key-bucketed under ``state_dir``:
+from disk, or durable and key-bucketed under ``state_dir``. Each trace
+compacts behind the batch: a maintainer's batch ends by starting a due fold
+on a worker thread (``Arrangement.maybe_compact``) and the next batch begins
+by swapping it in (``Arrangement.swap``), so the O(state) fold is off the
+batch's critical path:
 
 - ``CountMaintainer`` — incremental ``count_total`` against an arrangement
   (reference src/operators/count.rs:81-123): per batch, only the TOUCHED keys'
@@ -270,8 +274,10 @@ class CountMaintainer:
     state — the state itself never shuffles), and run ONE aggregate over
     those rows and the delta, grouped by key, for each key's old count and
     net change; every key whose net change is non-zero emits its retraction
-    pair. The returned DataFrame is valid until the next ``process_batch``
-    (which may compact).
+    pair. The trace folds behind the batch: a due fold starts when the
+    batch ends and is swapped in when the next begins. The returned
+    DataFrame is valid until the next ``process_batch`` (whose swap
+    releases the frames it reads).
     """
 
     def __init__(
@@ -312,7 +318,7 @@ class CountMaintainer:
             return self._process_batch(delta)
 
     def _process_batch(self, delta: DataFrame) -> DataFrame:
-        self.trace.maybe_compact()
+        self.trace.swap()
         # The raw delta, unconsolidated: the trace's fold consolidates it, and
         # the aggregate below sums duplicate and cancelling rows per key.
         d = tracked_local_checkpoint(
@@ -360,6 +366,7 @@ class CountMaintainer:
             .filter(F.col(self.alias) != 0)
         )
         self.trace.append(d)
+        self.trace.maybe_compact()
         return out
 
     def counts(self) -> DataFrame:
@@ -572,6 +579,7 @@ class KCoreMaintainer:
     def _process_batch(
         self, insert: DataFrame | None, delete: DataFrame | None
     ) -> DataFrame:
+        self.edges.swap()  # before the reap: a running fold reads the parts
         self._scratch.reap(keep=(self.core,))
         old_core = self.core
         # ONE delta checkpoint covers both sides, summed per edge (the trace
@@ -595,7 +603,6 @@ class KCoreMaintainer:
             if delete is not None
             else None
         )
-        self.edges.maybe_compact()
         if delta is not None:
             sym_part = delta.unionByName(
                 delta.select(
@@ -604,7 +611,7 @@ class KCoreMaintainer:
                     DIFF,
                 )
             )
-            # Arrangement.compact frees parts via release_checkpoint, and the
+            # The trace's swap frees parts via release_checkpoint, and the
             # lazy sym view would otherwise leak the backing blocks.
             self.edges.append(self._scratch.hand_off(delta, sym_part))
 
@@ -679,6 +686,7 @@ class KCoreMaintainer:
         )
         out = self._scratch.ck(out)
         self.core = core
+        self.edges.maybe_compact()
         return out
 
     def core_nodes(self) -> DataFrame:

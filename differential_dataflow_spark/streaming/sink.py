@@ -30,6 +30,7 @@ from pathlib import Path
 
 import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
 
 _PART = re.compile(r"part-(\d+)")
@@ -101,18 +102,23 @@ class ExactlyOnceSink:
         return lambda df, batch_id: self.write_batch(df, batch_id)
 
     def read_all(self, spark: SparkSession) -> DataFrame:
-        """All committed output (uncommitted/partial batch dirs excluded)."""
+        """All committed output (uncommitted/partial batch dirs excluded).
+        When every committed batch is an empty commit there are no files to
+        read, and the output is an empty frame with only ``batch_id``; a
+        sink with no commit at all raises ``FileNotFoundError``."""
         committed = [
             int(json.loads(p.read_text())["batch_id"])
             for p in (self.root / "commits").glob(f"{self.query_name}-*.json")
         ]
+        if not committed:
+            raise FileNotFoundError(f"no committed batches under {self.root}")
         paths = [
             str(self.root / "data" / f"batch_id={b}")
             for b in sorted(committed)
             if (self.root / "data" / f"batch_id={b}").exists()
         ]
         if not paths:
-            raise FileNotFoundError(f"no committed batches under {self.root}")
+            return spark.range(0).select(F.lit(0).cast("int").alias("batch_id"))
         return spark.read.option("basePath", str(self.root / "data")).parquet(*paths)
 
     def lineage(self) -> list[dict]:

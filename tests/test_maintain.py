@@ -4,6 +4,8 @@ contracts, src/operators/count.rs:81-123, src/operators/join.rs:255-556)."""
 
 from __future__ import annotations
 
+import threading
+
 from pyspark.sql import functions as F
 
 from differential_dataflow_spark import DiffCollection
@@ -604,16 +606,36 @@ def test_maintainers_release_scratch(spark):
             else km.process_batch(bridge, None)
         )
 
-    for make in (reachability, bfs, kcore):
+    def count():
+        # Folds every batch: release() finds a fold in flight, waits for
+        # it and frees its checkpoint with the trace's.
+        cm = CountMaintainer(spark, ["k"], alias="n", compact_every=1)
+        cm.seed_counts(spark.createDataFrame([(0, 1)], "k long, count long"))
+        return cm, lambda dele: cm.process_batch(
+            spark.createDataFrame([(0, -1 if dele else 1)], "k long, diff long")
+        )
+
+    def fold_threads():
+        return [
+            t for t in threading.enumerate()
+            if t.name == "arrangement-fold" and t.is_alive()
+        ]
+
+    for make in (reachability, bfs, kcore, count):
         before = persisted()
         m, batch = make()
         seen = []
         for i in range(12):
             assert batch(i % 2 == 0).count() > 0
+            # A fold behind the batch persists its checkpoint while it runs:
+            # sample once it has finished, so every sample counts it.
+            for t in fold_threads():
+                t.join()
             seen.append(persisted())
         assert max(seen[8:]) <= max(seen[:4]), (make.__name__, seen)
         m.release()
         assert persisted() <= before, make.__name__
+        assert not fold_threads(), make.__name__
 
 
 @pytest.mark.parametrize("maintainer", ["bfs", "kcore"])

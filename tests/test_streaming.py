@@ -206,6 +206,19 @@ def test_exactly_once_sink_commits_none_batch(spark, tmp_path):
     assert sorted(r.v for r in sink.read_all(spark).collect()) == [0, 1, 2]
 
 
+def test_exactly_once_sink_reads_empty_commits(spark, tmp_path):
+    # Commits that hold no data read back as an empty frame; a sink that
+    # has committed nothing at all has no output to read.
+    sink = ExactlyOnceSink(str(tmp_path / "out"), "empty")
+    with pytest.raises(FileNotFoundError):
+        sink.read_all(spark)
+    sink.write_batch(None, 0)
+    sink.write_batch(None, 1)
+    assert [e["batch_id"] for e in sink.lineage()] == [0, 1]
+    out = sink.read_all(spark)
+    assert out.columns == ["batch_id"] and out.count() == 0
+
+
 def test_exactly_once_sink_write_is_one_job(spark, tmp_path):
     # Lineage comes from the written footers, so writing an already
     # materialized frame launches the write job and nothing else.
